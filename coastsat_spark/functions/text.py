@@ -2,9 +2,10 @@
 
 The HTML->text extractor is the engine's per-row invariant surface: for
 every ``url`` the extracted ``text`` must be byte-identical to the table's
-``text`` column (BASELINE.json input_hint). Everything is a vectorized
-pandas UDF (Arrow-batched); the pure-Python/NumPy cores are importable so
-the pytest oracle exercises the same code on collected data.
+``text`` column (BASELINE.json input_hint). The extractor
+(`extract_text`) and the geotag parse (`operators.tiling.with_geo`) are
+pure JVM expressions; the byte-level Python forms (`extract_text_bytes`,
+`parse_geotag_bytes`) are their pytest references.
 
 Analysis operators (language-ID, quality scoring, token counting, rolling
 fingerprints) are the training-data-pipeline additions the engine provides
@@ -62,14 +63,6 @@ def parse_geotag_bytes(html: bytes) -> tuple[float, float]:
     return (float(m.group(1)), float(m.group(2)))
 
 
-@F.pandas_udf(T.StringType())
-def extract_text_arrow(html: pd.Series) -> pd.Series:
-    """Arrow-batched Python extractor (the r5 hot path). Kept as the
-    byte-level reference for the parity test and for non-UTF-8 corpora;
-    `extract_text` (all-JVM) is the corpus-scale path since r6."""
-    return html.map(extract_text_bytes)
-
-
 def extract_text(html) -> "F.Column":
     """HTML -> article text as a pure JVM expression (no Python, no
     Arrow transfer of the html payload — it stayed the biggest single
@@ -96,17 +89,6 @@ def extract_text(html) -> "F.Column":
         F.regexp_replace(s, "<[^>]+>", " "), r"^\s+|\s+$", ""
     )
     return F.when(has, article).otherwise(stripped)
-
-
-_GEO_SCHEMA = T.StructType(
-    [T.StructField("lat", T.DoubleType()), T.StructField("lon", T.DoubleType())]
-)
-
-
-@F.pandas_udf(_GEO_SCHEMA)
-def parse_geotag(html: pd.Series) -> pd.DataFrame:
-    vals = html.map(parse_geotag_bytes)
-    return pd.DataFrame({"lat": [v[0] for v in vals], "lon": [v[1] for v in vals]})
 
 
 # ---------------------------------------------------------------- tokens

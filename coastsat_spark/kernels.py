@@ -539,3 +539,26 @@ def despike(chainage: np.ndarray, max_cross_change: float) -> np.ndarray:
                 break
         k = k + 1
     return keep
+
+
+# ------------------------------------------------- Arrow list columns
+
+def arrow_list_flat(col) -> tuple[np.ndarray, np.ndarray]:
+    """(flat, lens) of an Arrow list column: the values of every row back
+    to back, and each row's length. The one place the list layout is read.
+
+    NULL rows get length 0 from the validity bitmap — Arrow allows a null
+    slot to span a nonzero offset range, and `flatten()` skips those
+    values, so `diff(offsets)` alone would misalign every later row.
+    Slicing offsets are honoured by both `offsets` and `flatten()`.
+    Raises ValueError if the values and lengths still disagree.
+    """
+    lens = np.diff(col.offsets.to_numpy()).astype(np.int64)
+    if col.null_count:
+        lens[col.is_null().to_numpy(zero_copy_only=False)] = 0
+    flat = col.flatten().to_numpy(zero_copy_only=False)
+    if len(flat) != lens.sum():
+        raise ValueError(
+            f"Arrow list column: {len(flat)} values but row lengths sum to {lens.sum()}"
+        )
+    return flat, lens

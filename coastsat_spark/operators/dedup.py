@@ -11,8 +11,9 @@ Scale design:
   -> count agg. The shingle join is the classic inverted-index pattern;
   hot shingles are capped (document frequency cut) to bound skew, the
   same defense Common-Crawl dedup pipelines use;
-- MinHash: K hash functions evaluated vectorized in one pandas UDF,
-  banded into B buckets -> equi-join on (band, signature slice) so only
+- MinHash: K hash functions evaluated vectorized over flat Arrow
+  buffers in one mapInArrow pass (`_map_token_hashes`), banded into B
+  buckets -> equi-join on (band, signature slice) so only
   bucket-colliding pairs are compared (LSH);
 - SimHash: 64-bit fingerprint, near-dups = identical fingerprints per
   band table (hamming<=k via k-of-B band equality).
@@ -24,12 +25,13 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql import Window
 
 from ..hashing import splitmix64
+from ..kernels import arrow_list_flat
 
 # ------------------------------------------------------------ exact dedup
 
@@ -125,44 +127,20 @@ def token_hashes_col(text_col: str) -> "F.Column":
     return F.expr(_TOKEN_HASH_EXPR.format(col=text_col))
 
 
-def np_minhash_hashes(tok_arrays, k: int, shingle_words: int = 3, seed: int = 42) -> np.ndarray:
-    """(n_docs, k) uint64 MinHash signatures from per-doc token-hash arrays.
-
-    Input: a sequence of int64/uint64 numpy arrays (one per doc, possibly
-    empty). Fully vectorized: one flat token-hash stream for the batch,
-    shingle digest = mix of `shingle_words` shifted multiplies with
-    cross-doc windows masked out, per-doc minima via np.minimum.reduceat.
-    The only per-row Python is the short-doc padding concat (rare).
-    Per-doc np.unique is skipped on purpose: min over a multiset equals
-    min over its set, so duplicate shingles cannot change a MinHash slot.
-    Docs with zero tokens keep the all-max sentinel row — callers must
-    filter them out (minhash_signatures does) so token-less docs never
-    collide with each other.
-    """
-    n = len(tok_arrays)
-    w = shingle_words
-    parts = []
-    lens = np.zeros(n, dtype=np.int64)
-    for row, a in enumerate(tok_arrays):
-        a = np.asarray(a, dtype=np.int64)
-        if a.size == 0:
-            continue
-        if a.size < w:  # pad short docs to one full window
-            a = np.concatenate([a, np.repeat(a[-1], w - a.size)])
-        parts.append(a)
-        lens[row] = a.size
-    if not parts:
-        return np.full((n, k), np.iinfo(np.uint64).max, dtype=np.uint64)
-    return _np_minhash_core(np.concatenate(parts), lens, k, w, seed)
-
-
 def np_minhash_from_flat(
     flat: np.ndarray, lens: np.ndarray, k: int, shingle_words: int = 3, seed: int = 42
 ) -> np.ndarray:
-    """`np_minhash_hashes` over the FLAT token-hash stream + per-doc
-    lengths (the Arrow list layout, zero object churn): pads short docs
-    with a vectorized gather instead of the per-row concat loop, then
-    runs the shared digest/slot core — bit-identical by construction."""
+    """(n_docs, k) uint64 MinHash signatures from the FLAT token-hash
+    stream of a batch plus per-doc lengths (the Arrow list layout, see
+    kernels.arrow_list_flat — zero per-row object churn).
+
+    Short docs (fewer than `shingle_words` tokens) are padded to one full
+    window by repeating their last token, as a vectorized gather. Per-doc
+    np.unique is skipped on purpose: min over a multiset equals min over
+    its set, so duplicate shingles cannot change a MinHash slot. Docs
+    with zero tokens keep the all-max sentinel row — callers drop them
+    (minhash_signatures does) so token-less docs never collide.
+    """
     w = shingle_words
     lens = np.asarray(lens, dtype=np.int64)
     flat = np.asarray(flat, dtype=np.int64)
@@ -186,7 +164,7 @@ def np_minhash_from_flat(
 def _np_minhash_core(
     flat: np.ndarray, lens: np.ndarray, k: int, w: int, seed: int
 ) -> np.ndarray:
-    """Digest + blocked-slot core shared by both input layouts. `flat`
+    """Digest + blocked-slot core of `np_minhash_from_flat`. `flat`
     holds the padded per-doc token hashes back to back; `lens` the
     padded lengths (0 = token-less doc, keeps the all-max sentinel)."""
     rng_idx = np.arange(k, dtype=np.uint64)
@@ -238,27 +216,59 @@ def _np_minhash_core(
     return out
 
 
+def _map_token_hashes(docs: DataFrame, kernel, out: str, text_col: str, id_col: str) -> DataFrame:
+    """One `mapInArrow` over (id, JVM token-hash list): the text column
+    never crosses the Arrow boundary, and the list column is read once
+    as flat buffers (kernels.arrow_list_flat). `kernel(flat, lens)`
+    returns (keep, values): a per-row bool mask (None keeps every row)
+    and the Arrow output column for the kept rows. `out` is the output
+    column's DDL ("name type"); the id type comes from `docs.dtypes`.
+
+    As a DataFrame transform (not an expression UDF) it is immune to
+    InferFiltersFromGenerate, which plans an expression UDF as TWO
+    ArrowEvalPython nodes under any downstream explode. Token-less docs
+    are dropped in the kernel because a `size(_th) > 0` pre-filter
+    would run the whole tokenize a second time."""
+    id_type = dict(docs.dtypes).get(id_col, "bigint")
+    out_name = out.split()[0]
+
+    def batches(it):
+        for batch in it:
+            if batch.num_rows == 0:
+                continue
+            keep, values = kernel(*arrow_list_flat(batch.column(1)))
+            ids = batch.column(0) if keep is None else batch.column(0).filter(pa.array(keep))
+            yield pa.RecordBatch.from_arrays([ids, values], names=[id_col, out_name])
+
+    return docs.select(F.col(id_col), token_hashes_col(text_col).alias("_th")).mapInArrow(
+        batches, f"{id_col} {id_type}, {out}"
+    )
+
+
+def _list_array(rows: np.ndarray, row_lens: np.ndarray) -> "pa.ListArray":
+    """array<long> Arrow column from back-to-back int64 values."""
+    offs = np.zeros(len(row_lens) + 1, dtype=np.int32)
+    np.cumsum(row_lens, out=offs[1:])
+    return pa.ListArray.from_arrays(pa.array(offs), pa.array(rows, type=pa.int64()))
+
+
 def minhash_signatures(
     docs: DataFrame, k: int = 128, shingle_words: int = 3, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """One row per doc with >=1 alnum token: (doc_id, sig array<long>).
 
     Tokenize + token-hash run in the JVM (regexp_extract_all + xxhash64);
-    the pandas UDF receives int64 arrays only — the text column never
-    transfers to Python. Token-less docs are dropped here (they carry no
-    dedup signal and a shared sentinel signature would merge them all).
+    the kernel sees flat int64 buffers only. Token-less and NULL-text
+    docs are dropped (they carry no dedup signal and a shared sentinel
+    signature would merge them all).
     """
 
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def mh(th: pd.Series) -> pd.Series:
-        sig = np_minhash_hashes(th.to_numpy(), k, shingle_words).astype(np.int64)
-        return pd.Series(list(sig))
+    def kernel(flat, lens):
+        has = lens > 0
+        sig = np_minhash_from_flat(flat, lens, k, shingle_words)[has]
+        return has, _list_array(sig.astype(np.int64).ravel(), np.full(len(sig), k))
 
-    return (
-        docs.select(F.col(id_col), token_hashes_col(text_col).alias("_th"))
-        .filter(F.size("_th") > 0)
-        .select(F.col(id_col), mh(F.col("_th")).alias("sig"))
-    )
+    return _map_token_hashes(docs, kernel, "sig array<long>", text_col, id_col)
 
 
 def _band_buckets(signatures: DataFrame, k: int, bands: int, id_col: str) -> DataFrame:
@@ -355,68 +365,44 @@ def minhash_band_keys(
     assignment path never materializes the k-slot signatures, cutting the
     Arrow return k/bands-fold and skipping the JVM banding pass.
 
-    Shape (r6): ONE `mapInArrow` over (id, token-hash array) — the list
-    column is consumed as its flat Arrow buffers (offsets + values, zero
-    per-row object churn; the r5 pandas_udf spent seconds per batch just
-    materializing 10k numpy objects on each side of the boundary) and
-    the band keys go back the same way. Token-less and NULL-text docs
-    get an EMPTY key array (no dedup signal; the downstream explode
-    drops them), replacing the r5 pre-filter `size(_th) > 0`, which
-    re-evaluated the whole tokenize (regexp_extract_all + per-token
-    xxhash64) a second time in the scan Filter — ~9 s of the 24 s
-    map-stage CPU at sf0.1/N32. As a DataFrame transform (not an
-    expression), mapInArrow is also immune to the
-    InferFiltersFromGenerate duplication that planned the r5 expression
-    UDF as TWO ArrowEvalPython nodes under any downstream explode."""
+    Shape: ONE `mapInArrow` over (id, token-hash array) via
+    `_map_token_hashes` (a pandas UDF spends seconds per batch just
+    materializing 10k numpy objects on each side of the boundary).
+    Token-less and NULL-text docs get an EMPTY key array (no dedup
+    signal; the downstream explode drops them)."""
     r = k // bands
     salts = splitmix64(np.arange(bands, dtype=np.uint64) + np.uint64(0xB00B5))
-    id_type = dict(docs.dtypes).get(id_col, "bigint")
 
-    def bk_batches(batches):
-        import pyarrow as pa
+    def kernel(flat, lens):
+        sig = np_minhash_from_flat(flat, lens, k, shingle_words)  # (n, k) uint64
+        n = len(lens)
+        keys = np.empty((n, bands), dtype=np.uint64)
+        for b in range(bands):
+            acc = np.full(n, salts[b], dtype=np.uint64)
+            for i in range(r):
+                acc = splitmix64(acc ^ sig[:, b * r + i])
+            keys[:, b] = acc
+        has = lens > 0
+        return None, _list_array(keys[has].astype(np.int64).ravel(), has * bands)
 
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            col = batch.column(1)
-            offs = col.offsets.to_numpy()
-            lens = np.diff(offs).astype(np.int64)  # NULL rows -> 0
-            flat = col.flatten().to_numpy(zero_copy_only=False)
-            sig = np_minhash_from_flat(flat, lens, k, shingle_words)  # (n, k) uint64
-            keys = np.empty((n, bands), dtype=np.uint64)
-            for b in range(bands):
-                acc = np.full(n, salts[b], dtype=np.uint64)
-                for i in range(r):
-                    acc = splitmix64(acc ^ sig[:, b * r + i])
-                keys[:, b] = acc
-            has = lens > 0
-            out_offs = np.zeros(n + 1, dtype=np.int32)
-            np.cumsum(has * bands, out=out_offs[1:])
-            values = keys[has].astype(np.int64).ravel()
-            bkeys = pa.ListArray.from_arrays(
-                pa.array(out_offs), pa.array(values, type=pa.int64())
-            )
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(0), bkeys], names=[id_col, "bkeys"]
-            )
-
-    return docs.select(F.col(id_col), token_hashes_col(text_col).alias("_th")).mapInArrow(
-        bk_batches, f"{id_col} {id_type}, bkeys array<long>"
-    )
+    return _map_token_hashes(docs, kernel, "bkeys array<long>", text_col, id_col)
 
 
-def _star_edges(raw: DataFrame, id_col: str, prepartitioned: bool = False) -> DataFrame:
+def _star_edges(raw: DataFrame, id_col: str) -> DataFrame:
     """(a, b) star edges per LSH bucket: every member points at its
     bucket's min id; singleton buckets (the vast majority) drop before
     any further work.
 
-    Shape (r6): ONE explicit repartition by bkey whose exchange is
-    written once and read by BOTH consumers (ReusedExchange) — a hash
+    Precondition: `raw` (id, bkey) is already hash-partitioned by bkey
+    into the session's shuffle-partition count AND persisted, as
+    `minhash_dedup_assign` builds it. It is consumed twice — a hash
     aggregate building the dup-bucket table (min id + count, n>1 only)
-    and a shuffled-hash join probing it with the co-partitioned bucket
-    table (hinted; zero additional exchange because both sides carry
-    the same hashpartitioning(bkey, P)).
+    and a shuffled-hash join probing it (hinted; zero additional
+    exchange because both sides carry the same hashpartitioning(bkey,
+    P)). ReusedExchange does NOT fire for these two structurally
+    identical branches in Spark 4.1 (measured: both exchanges
+    materialized), so the persist is what makes the single full
+    exchange and the upstream tokenize+MinHash run once.
 
     Why not the r5 entire-partition window: WindowExec pays per-GROUP
     buffer/iterator overhead, and LSH bucket keys are mostly unique —
@@ -434,32 +420,19 @@ def _star_edges(raw: DataFrame, id_col: str, prepartitioned: bool = False) -> Da
     table. The explicit repartition + co-partitioned SHJ makes the
     single full exchange deterministic, independent of size estimates.
 
-    `prepartitioned=True` promises the input is already
-    hash-partitioned by bkey into the session's shuffle-partition count
-    (and, when consumed more than once, persisted by the caller —
-    ReusedExchange does NOT fire for these two structurally identical
-    branches in Spark 4.1, measured: both exchanges materialized, so
-    the caller-side persist is what makes the exchange single-run).
-
     Still all-JVM: an earlier A/B against a repartition +
     sortWithinPartitions + mapInPandas formulation showed the Python
     pass scaling NEGATIVELY with cores (Arrow round-trip of the full
     bucket table contends for memory bandwidth).
     """
-    if prepartitioned:
-        r2 = raw
-    else:
-        spark = raw.sparkSession
-        p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        r2 = raw.repartition(p, "bkey")
     dup = (
-        r2.groupBy("bkey")
+        raw.groupBy("bkey")
         .agg(F.min(id_col).alias("b"), F.count(F.lit(1)).alias("_n"))
         .filter(F.col("_n") > 1)
         .select("bkey", "b")
     )
     return (
-        r2.join(dup.hint("shuffle_hash"), "bkey")
+        raw.join(dup.hint("shuffle_hash"), "bkey")
         .filter(F.col(id_col) != F.col("b"))
         .select(F.col(id_col).alias("a"), "b")
         .distinct()
@@ -527,7 +500,9 @@ def minhash_dedup_assign(
     3. connected components over the compressed edge list (|edges| ~
        |dup docs|, orders of magnitude smaller than the bucket table):
        driver-side numpy pointer jumping below `driver_cc_max_edges`,
-       distributed min-label propagation with pointer jumping above it.
+       distributed min-label propagation with pointer jumping above it,
+       which raises RuntimeError if labels still change after
+       `max_iters` rounds.
 
     Returns (doc_id, canonical_id) where canonical_id is the smallest
     doc id reachable through shared LSH buckets.
@@ -550,7 +525,7 @@ def minhash_dedup_assign(
         .repartition(p, "bkey")
         .persist()
     )
-    star = _star_edges(raw, id_col, prepartitioned=True).persist()
+    star = _star_edges(raw, id_col).persist()
     n_edges = star.count()
 
     if n_edges == 0:
@@ -620,6 +595,11 @@ def minhash_dedup_assign(
             labels = merged
             if changed == 0:
                 break
+        else:
+            raise RuntimeError(
+                f"minhash_dedup_assign: distributed connected components did not "
+                f"converge in max_iters={max_iters} rounds"
+            )
     # docs never seen in a duplicate bucket are their own canonical
     all_ids = docs.select(F.col(id_col))
     out = all_ids.join(labels, id_col, "left").select(
@@ -630,19 +610,18 @@ def minhash_dedup_assign(
 
 # ---------------------------------------------------------------- SimHash
 
-def np_simhash_hashes(tok_arrays, seed: int = 42) -> np.ndarray:
-    """64-bit SimHash per doc from token-hash arrays (sign-aggregated bit
-    votes), vectorized across the whole batch: one flat token stream, one
-    (total x 64) bit matrix, per-doc vote sums via np.add.reduceat."""
-    n = len(tok_arrays)
-    out = np.zeros(n, dtype=np.uint64)
+def np_simhash_hashes(flat: np.ndarray, lens: np.ndarray, seed: int = 42) -> np.ndarray:
+    """64-bit SimHash per doc (sign-aggregated bit votes) from the flat
+    token-hash stream of a batch plus per-doc lengths, vectorized across
+    the batch: one (total x 64) bit matrix, per-doc vote sums via
+    np.add.reduceat. Token-less docs get 0."""
+    lens = np.asarray(lens, dtype=np.int64)
+    out = np.zeros(len(lens), dtype=np.uint64)
     bitw = np.uint64(1) << np.arange(64, dtype=np.uint64)
-    lens = np.fromiter((len(a) for a in tok_arrays), dtype=np.int64, count=n)
     nonempty = np.flatnonzero(lens)
     if nonempty.size == 0:
         return out
-    flat = np.concatenate([np.asarray(a, dtype=np.int64) for a in tok_arrays if len(a)])
-    hs = splitmix64(flat.view(np.uint64) + np.uint64(seed))
+    hs = splitmix64(np.asarray(flat, dtype=np.int64).view(np.uint64) + np.uint64(seed))
     bits = ((hs[:, None] & bitw[None, :]) != 0).astype(np.int32)
     starts = np.concatenate(([0], np.cumsum(lens[nonempty])[:-1]))
     votes = 2 * np.add.reduceat(bits, starts, axis=0) - lens[nonempty, None]
@@ -652,18 +631,14 @@ def np_simhash_hashes(tok_arrays, seed: int = 42) -> np.ndarray:
 
 def simhash_fingerprints(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """(doc_id, simhash) for docs with >=1 alnum token. Tokenize + hash are
-    JVM-side (see minhash_signatures); token-less docs are dropped so they
+    JVM-side (see `_map_token_hashes`); token-less docs are dropped so they
     cannot all collide at the zero fingerprint."""
 
-    @F.pandas_udf(T.LongType())
-    def sh(th: pd.Series) -> pd.Series:
-        return pd.Series(np_simhash_hashes(th.to_numpy()).astype(np.int64))
+    def kernel(flat, lens):
+        has = lens > 0
+        return has, pa.array(np_simhash_hashes(flat, lens)[has].astype(np.int64))
 
-    return (
-        docs.select(F.col(id_col), token_hashes_col(text_col).alias("_th"))
-        .filter(F.size("_th") > 0)
-        .select(F.col(id_col), sh(F.col("_th")).alias("simhash"))
-    )
+    return _map_token_hashes(docs, kernel, "simhash bigint", text_col, id_col)
 
 
 def simhash_dup_pairs(
@@ -753,7 +728,7 @@ def tokhash_cte_sql(
 
 def _minhash_sig_cte_sql(k: int, shingle_words: int, seed: int) -> str:
     """CTE text from ``tokh`` to ``sig(doc_id, slot, v)`` — the MinHash
-    signature slots of np_minhash_hashes: 3-token shingle digests
+    signature slots of np_minhash_from_flat: 3-token shingle digests
     (shifted-multiply fold + splitmix64, short docs padded (t0, last,
     last)), then per-slot multiply-shift minima. Slot/mix constants are
     generated by the same hashing.splitmix64 the kernel uses."""

@@ -1,9 +1,11 @@
 """Similarity search over embedding columns (training-data pipeline).
 
-Brute-force cosine top-k is the exact baseline (pure column math via
-`aggregate`/`zip_with` — JVM-side, no Python); the scale paths are
-sign-LSH bucketing (random-hyperplane) and a centroid-probe (IVF-style)
-variant, both of which cut the candidate set before the exact rerank.
+Brute-force cosine top-k is the exact baseline: one `mapInArrow` numpy
+kernel scores each corpus batch against the collected query matrix and
+keeps its batch-local top-k. The scale paths are sign-LSH bucketing
+(random-hyperplane) and a centroid-probe (IVF-style) variant, both of
+which cut the candidate set before an exact rerank with the JVM
+`aggregate`/`zip_with` cosine (`_dot`/`_sq_norm`).
 
 Embeddings table shape: (vec_id long, embedding array<float>, label int)
 — the driver testdata schema.
@@ -19,45 +21,21 @@ from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
 from ..hashing import splitmix64
+from ..kernels import arrow_list_flat
 
 
-def _dot(a: str, b: str, dim: int | None = None):
-    """Dot product of two array<float> columns.
-
-    With ``dim`` (the known embedding width) the fold is UNROLLED into a
-    plain expression chain — lit(0.0) + a[1]*b[1] + a[2]*b[2] + ... —
-    which whole-stage codegen compiles, unlike the higher-order
-    aggregate/zip_with form, which Catalyst evaluates INTERPRETED with
-    per-element lambda dispatch (measured ~20x slower per row; it
-    dominated ann_bruteforce's wall time). Bit-identical by construction:
-    the chain performs the same float multiplies and the same
-    left-to-right double additions, starting from the same 0.0 literal,
-    as aggregate(zip_with(a, b, (x,y) -> x*y), 0.0D, (s,v) -> s+v) on
-    equal-length arrays (element_at is 1-based; a ragged row yields NULL
-    either way via NULL propagation).
-    """
-    if dim is None:
-        return F.expr(f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (s, v) -> s + v)")
-    acc = F.lit(0.0)
-    for i in range(1, dim + 1):
-        acc = acc + F.element_at(F.col(a), i) * F.element_at(F.col(b), i)
-    return acc
+def _dot(a: str, b: str):
+    """Dot product of two array<float> columns (JVM higher-order fold)."""
+    return F.expr(f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (s, v) -> s + v)")
 
 
-def _sq_norm(col: str, dim: int | None = None):
-    """Sum of squares of an array<float> column; same unrolling contract
-    (and the same IEEE operation order) as `_dot`."""
-    if dim is None:
-        return F.expr(f"aggregate({col}, 0.0D, (s, v) -> s + v * v)")
-    acc = F.lit(0.0)
-    for i in range(1, dim + 1):
-        e = F.element_at(F.col(col), i)
-        acc = acc + e * e
-    return acc
+def _sq_norm(col: str):
+    """Sum of squares of an array<float> column, in `_dot`'s operation order."""
+    return F.expr(f"aggregate({col}, 0.0D, (s, v) -> s + v * v)")
 
 
-def with_norm(emb: DataFrame, col: str = "embedding", dim: int | None = None) -> DataFrame:
-    return emb.withColumn("norm", F.sqrt(_sq_norm(col, dim)))
+def with_norm(emb: DataFrame, col: str = "embedding") -> DataFrame:
+    return emb.withColumn("norm", F.sqrt(_sq_norm(col)))
 
 
 def cosine_topk_bruteforce(
@@ -66,7 +44,6 @@ def cosine_topk_bruteforce(
     k: int = 10,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
-    n_salts: int = 32,
 ) -> DataFrame:
     """Exact cosine top-k: one corpus scan scored against the collected
     query matrix inside `mapInArrow`, batch-local top-k, tiny final window.
@@ -90,20 +67,32 @@ def cosine_topk_bruteforce(
     correctly-rounded sqrt, and cosine = dot / (q_norm * c_norm) in
     float64 — the same IEEE operations in the same order. Ranking ties
     break (cosine DESC, c_id ASC) with NaN ordered first like Spark's
-    DESC NULLS LAST over doubles (NaN > +Inf); `n_salts` is kept for API
-    compatibility (the salted phase no longer exists). One documented
+    DESC NULLS LAST over doubles (NaN > +Inf). One documented
     divergence on DEGENERATE input only: a zero-norm vector made the r5
     expression RAISE under ANSI mode (DIVIDE_BY_ZERO); the kernel
     degrades to non-finite cosines ranked first instead (pytest-pinned).
+
+    Contract: every embedding is non-NULL and all share one width; a
+    NULL or ragged query or corpus row raises ValueError naming
+    `emb_col` (the r5 expression NULL-propagated instead). Ids may be
+    any orderable type; `q_id`/`c_id` keep the input id types.
     """
-    qp = queries.select(F.col(id_col).alias("q_id"), F.col(emb_col).alias("q_emb")).toPandas()
-    q_ids = qp["q_id"].to_numpy(np.int64)
-    nq = len(q_ids)
+    from pyspark.sql.pandas.types import to_arrow_type
+
     spark = corpus.sparkSession
+    q_type, c_type = dict(queries.dtypes)[id_col], dict(corpus.dtypes)[id_col]
+    qp = queries.select(F.col(id_col).alias("q_id"), F.col(emb_col).alias("q_emb")).toPandas()
+    nq = len(qp)
     if nq == 0:
         return spark.createDataFrame(
-            [], "q_id long, c_id long, cosine double, rank int"
+            [], f"q_id {q_type}, c_id {c_type}, cosine double, rank int"
         )
+    widths = qp["q_emb"].map(lambda v: -1 if v is None else len(v))
+    if (widths < 0).any() or widths.nunique() > 1:
+        bad = qp["q_id"][(widths < 0) | (widths != widths.max())].tolist()[:5]
+        raise ValueError(f"cosine_topk_bruteforce: NULL or ragged query {emb_col!r} (q_id {bad})")
+    q_ids = qp["q_id"].to_numpy()
+    q_arrow_type = to_arrow_type(queries.schema[id_col].dataType)
     Qf = np.vstack(qp["q_emb"].to_numpy()).astype(np.float32, copy=False)
     d = Qf.shape[1]
     # query norms once, driver-side: float32 squares folded left-to-right
@@ -117,17 +106,19 @@ def cosine_topk_bruteforce(
     def score_batches(batches):
         import pyarrow as pa
 
+        q_arrow = pa.array(q_ids, type=q_arrow_type)
         qrange = np.arange(nq, dtype=np.int64)
         for batch in batches:
             n = batch.num_rows
             if n == 0:
                 continue
-            c_ids = batch.column(0).to_numpy()
-            col = batch.column(1)
-            offs = col.offsets.to_numpy()
-            Mf = col.flatten().to_numpy(zero_copy_only=False)
-            if not np.all(np.diff(offs) == d):
-                raise ValueError("ragged embedding widths in corpus batch")
+            c_col = batch.column(0)
+            c_ids = c_col.to_numpy(zero_copy_only=False)
+            Mf, lens = arrow_list_flat(batch.column(1))
+            if not np.all(lens == d):
+                raise ValueError(
+                    f"cosine_topk_bruteforce: NULL or ragged corpus {emb_col!r} (width != {d})"
+                )
             Mf = Mf.reshape(n, d)
             acc = np.zeros((n, nq), dtype=np.float64)
             cn2 = np.zeros(n, dtype=np.float64)
@@ -137,15 +128,17 @@ def cosine_topk_bruteforce(
                 acc += np.multiply.outer(mi, Qf[:, i])
             cos = acc / (qn[None, :] * np.sqrt(cn2)[:, None])
             # flatten query-major; drop self-pairs; rank (NaN first —
-            # Spark DESC over doubles — then cosine desc, c_id asc)
+            # Spark DESC over doubles — then cosine desc, c_id asc; ids
+            # of any type order through their rank within the batch)
             cosF = cos.T.ravel()
-            cidF = np.tile(c_ids, nq)
+            cidxF = np.tile(np.arange(n, dtype=np.int64), nq)
             qgF = np.repeat(qrange, n)
-            keep = cidF != q_ids[qgF]
-            cosF, cidF, qgF = cosF[keep], cidF[keep], qgF[keep]
+            keep = c_ids[cidxF] != q_ids[qgF]
+            cosF, cidxF, qgF = cosF[keep], cidxF[keep], qgF[keep]
+            c_rank = np.unique(c_ids, return_inverse=True)[1]
             nanF = np.isnan(cosF)
             negcos = np.where(nanF, 0.0, -cosF)
-            order = np.lexsort((cidF, negcos, ~nanF, qgF))
+            order = np.lexsort((c_rank[cidxF], negcos, ~nanF, qgF))
             counts = np.bincount(qgF, minlength=nq)
             starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
             take = np.concatenate(
@@ -153,8 +146,8 @@ def cosine_topk_bruteforce(
             ) if len(order) else np.empty(0, dtype=np.int64)
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(q_ids[qgF[take]], type=pa.int64()),
-                    pa.array(cidF[take], type=pa.int64()),
+                    q_arrow.take(pa.array(qgF[take])),
+                    c_col.take(pa.array(cidxF[take])),
                     pa.array(cosF[take], type=pa.float64()),
                 ],
                 names=["q_id", "c_id", "cosine"],
@@ -162,7 +155,7 @@ def cosine_topk_bruteforce(
 
     cand = corpus.select(
         F.col(id_col).alias("c_id"), F.col(emb_col).alias("c_emb")
-    ).mapInArrow(score_batches, "q_id long, c_id long, cosine double")
+    ).mapInArrow(score_batches, f"q_id {q_type}, c_id {c_type}, cosine double")
     w2 = W.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
     return (
         cand.withColumn("rank", F.row_number().over(w2))

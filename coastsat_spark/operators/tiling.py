@@ -5,7 +5,7 @@ EP1 download+warp chain, SDS_download.py:680-964): web pages carrying a
 geotag become "observations" on a world-fixed pixel grid.
 
 Scale design:
-- geotag parse is one Arrow-batched pandas UDF (the only Python hop);
+- geotag parse is one JVM regex over the html head (no Python hop);
 - cell/tile/pixel keys and all five band values are pure column
   arithmetic — they stay inside whole-stage codegen and are available to
   Catalyst for pruning (materialized-column decision, SURVEY.md §4.2);
@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 
 from ..datagen import COAST_AMP, COAST_WAVELEN
 from ..functions import cells
-from ..functions.text import parse_geotag
 
 BANDS = ["blue", "green", "red", "nir", "swir"]
 
@@ -61,7 +60,6 @@ def _noise(lat_i, lon_i, p: int, q: int):
     ) - F.lit(0.5)
 
 
-_GEO_JVM_RE = r'<meta name="geo" content="(-?\d+\.\d+);(-?\d+\.\d+)"'
 # single-capture variant: grab "lat;lon" in ONE regex pass and split on
 # ';' afterwards. The two-group form needed two regexp_extract calls
 # (group 1 + group 2) which are DIFFERENT expressions to Catalyst, so
@@ -71,26 +69,25 @@ _GEO_JVM_RE = r'<meta name="geo" content="(-?\d+\.\d+);(-?\d+\.\d+)"'
 _GEO_JVM_RE_PAIR = r'<meta name="geo" content="(-?\d+\.\d+;-?\d+\.\d+)"'
 
 
-def with_geo(docs: DataFrame, jvm: bool = True) -> DataFrame:
-    """Parse the html geotag into lat/lon columns.
+def with_geo(docs: DataFrame) -> DataFrame:
+    """Parse the html geotag into lat/lon columns, pure JVM.
 
-    Default path is pure JVM: the geo meta sits in the document head, so
-    `regexp_extract` over the first bytes cast to string stays inside
-    whole-stage codegen — NO Python on the ingestion hot path at all.
-    `jvm=False` uses the Arrow pandas UDF (general fallback; the parity
-    test asserts both paths agree byte-for-byte on the corpus).
+    The geotag is read from the FIRST 160 BYTES of `html` only (the geo
+    meta sits in the document head): `regexp_extract` over that prefix
+    cast to string stays inside whole-stage codegen, with no Python on
+    the ingestion hot path. A tag further into the document yields NULL
+    lat/lon. `functions.text.parse_geotag_bytes` is the Python reference
+    (it searches the whole document); the parity test pins agreement on
+    the generated corpus.
     """
-    if jvm:
-        head = F.substring(F.col("html"), 1, 160).cast("string")
-        pair = F.regexp_extract(head, _GEO_JVM_RE_PAIR, 1)
-        parts = F.split(pair, ";")
-        # lat/lon strings cannot contain ';' (pattern is digits/dot/sign),
-        # so splitting the joint capture is exactly the two-group parse
-        return docs.withColumn(
-            "lat", F.when(pair != "", parts.getItem(0).cast("double"))
-        ).withColumn("lon", F.when(pair != "", parts.getItem(1).cast("double")))
-    g = parse_geotag(F.col("html"))
-    return docs.withColumn("_g", g).select("*", "_g.lat", "_g.lon").drop("_g")
+    head = F.substring(F.col("html"), 1, 160).cast("string")
+    pair = F.regexp_extract(head, _GEO_JVM_RE_PAIR, 1)
+    parts = F.split(pair, ";")
+    # lat/lon strings cannot contain ';' (pattern is digits/dot/sign),
+    # so splitting the joint capture is exactly the two-group parse
+    return docs.withColumn(
+        "lat", F.when(pair != "", parts.getItem(0).cast("double"))
+    ).withColumn("lon", F.when(pair != "", parts.getItem(1).cast("double")))
 
 
 def with_bands(docs: DataFrame) -> DataFrame:

@@ -181,14 +181,57 @@ def test_band_keys_null_and_short_docs(spark):
         assert out.loc[d, "canonical_id"] == d
 
 
-def test_np_minhash_flat_matches_legacy_layout():
-    """np_minhash_from_flat (Arrow flat buffers) must be bit-identical to
-    np_minhash_hashes (per-row arrays) across ragged lengths incl. the
-    padded short-doc cases."""
+def test_np_minhash_flat_batch_matches_per_doc():
+    """The batched flat kernel must give every doc the signature it gets
+    when hashed alone, across ragged lengths incl. empty docs (all-max
+    sentinel) and short docs, which equal their explicit last-token
+    padding to one full 3-token window."""
     rng = np.random.default_rng(7)
     lens = [0, 1, 2, 3, 4, 0, 17, 1, 2, 40, 0, 5]
     arrays = [rng.integers(-2**62, 2**62, size=n, dtype=np.int64) for n in lens]
-    flat = np.concatenate([a for a in arrays]) if arrays else np.empty(0, np.int64)
-    legacy = dedup.np_minhash_hashes(np.array(arrays, dtype=object), 64, 3)
-    flatv = dedup.np_minhash_from_flat(flat, np.array(lens), 64, 3)
-    assert (legacy == flatv).all()
+    batch = dedup.np_minhash_from_flat(np.concatenate(arrays), np.array(lens), 64, 3)
+    assert batch.shape == (len(lens), 64)
+    for a, got in zip(arrays, batch):
+        assert (got == dedup.np_minhash_from_flat(a, [len(a)], 64, 3)[0]).all()
+        if len(a) == 0:
+            assert (got == np.iinfo(np.uint64).max).all()
+        elif len(a) < 3:
+            padded = np.concatenate([a, np.repeat(a[-1], 3 - len(a))])
+            assert (got == dedup.np_minhash_from_flat(padded, [3], 64, 3)[0]).all()
+
+
+def test_signatures_and_simhash_drop_tokenless_docs_keep_id_type(spark):
+    """minhash_signatures / simhash_fingerprints drop NULL-text and
+    token-less docs inside the kernel and keep the input id type."""
+    pdf = pd.DataFrame(
+        {
+            "doc_id": ["a", "b", "c", "d", "e"],
+            "text": ["alpha beta gamma delta", None, "", "!!!", "one"],
+        }
+    )
+    sdf = spark.createDataFrame(pdf)
+    sigs = dedup.minhash_signatures(sdf, k=16)
+    fps = dedup.simhash_fingerprints(sdf)
+    assert dict(sigs.dtypes)["doc_id"] == "string"
+    assert dict(fps.dtypes)["doc_id"] == "string"
+    s = sigs.toPandas().set_index("doc_id")
+    assert sorted(s.index) == ["a", "e"]
+    assert all(len(v) == 16 for v in s["sig"])
+    assert sorted(fps.toPandas()["doc_id"]) == ["a", "e"]
+
+
+def test_minhash_assignment_distributed_raises_when_unconverged(spark):
+    """The distributed label-propagation loop must never return
+    unconverged labels: on a chain of overlapping docs it raises once
+    `max_iters` runs out while labels still change, and with enough
+    rounds it matches the driver-side components."""
+    words = [f"q{_letters(i)}" for i in range(80)]
+    texts = [" ".join(words[2 * i : 2 * i + 40]) for i in range(20)]
+    sdf = spark.createDataFrame(pd.DataFrame({"doc_id": np.arange(20), "text": texts}))
+    with pytest.raises(RuntimeError, match="max_iters=1"):
+        dedup.minhash_dedup_assign(sdf, driver_cc_max_edges=0, max_iters=1).count()
+    a = dedup.minhash_dedup_assign(sdf).toPandas()
+    b = dedup.minhash_dedup_assign(sdf, driver_cc_max_edges=0).toPandas()
+    ma = dict(zip(a["doc_id"], a["canonical_id"]))
+    assert ma == dict(zip(b["doc_id"], b["canonical_id"]))
+    assert sum(c != d for d, c in ma.items()) > 1  # the chain links docs

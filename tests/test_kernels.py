@@ -292,3 +292,61 @@ def test_buffer_mask_float_and_out_of_range_points():
     # out-of-grid point must NOT wrap to the opposite edge
     got2 = K.buffer_mask(shape, np.array([-1]), np.array([0]), 1.0)
     assert got2[0, 0] and not got2[5, 0]
+
+
+class TestArrowListFlat:
+    """kernels.arrow_list_flat: the one reader of Arrow list columns."""
+
+    @staticmethod
+    def _with_null_extent():
+        import pyarrow as pa
+
+        # row 1 is NULL but spans offsets [2, 5): legal Arrow, and
+        # flatten() skips those three values
+        return pa.ListArray.from_arrays(
+            pa.array([0, 2, 5, 7], pa.int32()),
+            pa.array(range(7), pa.int64()),
+            mask=pa.array([False, True, False]),
+        )
+
+    def test_null_slot_with_nonzero_extent(self):
+        flat, lens = K.arrow_list_flat(self._with_null_extent())
+        assert flat.tolist() == [0, 1, 5, 6]
+        assert lens.tolist() == [2, 0, 2]
+
+    def test_sliced(self):
+        col = self._with_null_extent()
+        flat, lens = K.arrow_list_flat(col.slice(1))
+        assert flat.tolist() == [5, 6] and lens.tolist() == [0, 2]
+        flat, lens = K.arrow_list_flat(col.slice(0, 1))
+        assert flat.tolist() == [0, 1] and lens.tolist() == [2]
+
+    def test_empty_batch(self):
+        import pyarrow as pa
+
+        flat, lens = K.arrow_list_flat(pa.array([], pa.list_(pa.int64())))
+        assert len(flat) == 0 and len(lens) == 0
+        flat, lens = K.arrow_list_flat(self._with_null_extent().slice(3))
+        assert len(flat) == 0 and len(lens) == 0
+
+    def test_float_values_and_all_null_rows(self):
+        import pyarrow as pa
+
+        col = pa.array([[1.0, 2.0], None, [], None], pa.list_(pa.float32()))
+        flat, lens = K.arrow_list_flat(col)
+        assert flat.dtype == np.float32 and flat.tolist() == [1.0, 2.0]
+        assert lens.tolist() == [2, 0, 0, 0]
+
+    def test_mismatch_raises(self):
+        import pyarrow as pa
+
+        class Misaligned:  # offsets claim more values than flatten() yields
+            offsets = pa.array([0, 2, 4], pa.int32())
+            null_count = 0
+
+            @staticmethod
+            def flatten():
+                return pa.array([1, 2, 3], pa.int64())
+
+        with pytest.raises(ValueError, match="3 values"):
+            K.arrow_list_flat(Misaligned())

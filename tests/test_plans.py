@@ -213,7 +213,7 @@ def test_star_edges_single_bucket_exchange(spark):
         .persist()
     )
     try:
-        out = dedup._star_edges(raw, "doc_id", prepartitioned=True)
+        out = dedup._star_edges(raw, "doc_id")
         # the initial plan carries ENSURE_REQUIREMENTS bkey exchanges
         # that AQE elides once the cache stage reports its partitioning;
         # assert on the FINAL executed plan (what actually ran)

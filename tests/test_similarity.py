@@ -328,3 +328,44 @@ def test_bruteforce_ties_match_jvm_and_zero_norm_degrades(spark):
     ).toPandas()
     top = out.sort_values("rank").iloc[0]
     assert top["c_id"] == 2 and not math.isfinite(top["cosine"])
+
+
+def _emb_rows_df(spark, rows, id_type=T.LongType()):
+    schema = T.StructType(
+        [
+            T.StructField("vec_id", id_type),
+            T.StructField("embedding", T.ArrayType(T.FloatType())),
+        ]
+    )
+    return spark.createDataFrame(rows, schema)
+
+
+def test_bruteforce_null_query_raises_naming_column(spark):
+    sdf = _emb_rows_df(spark, [(0, [1.0, 0.0]), (1, None), (2, [0.0, 1.0])])
+    with pytest.raises(ValueError, match="NULL or ragged query 'embedding'"):
+        similarity.cosine_topk_bruteforce(sdf, sdf.filter("vec_id != 1"), k=1)
+
+
+def test_bruteforce_null_or_ragged_corpus_raises(spark):
+    good = _emb_rows_df(spark, [(0, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [0.5, 0.5])])
+    q = good.filter("vec_id = 0")
+    assert similarity.cosine_topk_bruteforce(q, good, k=2).count() == 2
+    for bad in (None, [1.0, 0.0, 0.0]):
+        corpus = good.union(_emb_rows_df(spark, [(9, bad)]))
+        with pytest.raises(Exception, match="NULL or ragged corpus 'embedding'"):
+            similarity.cosine_topk_bruteforce(q, corpus, k=2).collect()
+
+
+def test_bruteforce_string_ids(spark, clustered):
+    """Output id types follow the input: zero-padded string ids order
+    like the numeric ids, so the ranking must match the bigint run."""
+    from pyspark.sql import functions as F
+
+    _, sdf = clustered
+    s = sdf.select(F.format_string("v%03d", "vec_id").alias("vec_id"), "embedding")
+    got = similarity.cosine_topk_bruteforce(s.filter("vec_id < 'v010'"), s, k=5)
+    assert dict(got.dtypes)["q_id"] == "string"
+    assert dict(got.dtypes)["c_id"] == "string"
+    ref = similarity.cosine_topk_bruteforce(sdf.filter("vec_id < 10"), sdf, k=5)
+    fmt = lambda r: (f"v{r[0]:03d}", f"v{r[1]:03d}", r[2], r[3])
+    assert sorted(tuple(r) for r in got.collect()) == sorted(fmt(r) for r in ref.collect())

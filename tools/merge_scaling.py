@@ -26,7 +26,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # Known lineage breaks, keyed by window basename -> queries to DROP.
 # r4w1-r4w5 measured the per-slot-splitmix64 MinHash kernel; the
 # multiply-shift kernel landed before r4w6 (operators/dedup.py
-# np_minhash_hashes), so their minhash legs are a different program.
+# _np_minhash_core), so their minhash legs are a different program.
 # The mapInPandas contour kernel (operators/raster.py, commit cece258)
 # landed AFTER all r4w windows, so their flagship legs are also a
 # different program from the v2 lineage (scaling_r4v2w*); only
