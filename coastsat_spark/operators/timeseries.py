@@ -179,6 +179,27 @@ def trend(ts: DataFrame, time_col: str = "scene_month") -> DataFrame:
 
 # ------------------------------------------------------------- as-of (J3)
 
+def _running_match(pc: list[str], forward: bool) -> Column:
+    """Nearest right row's `_match` struct for each row of a tagged union
+    (`_side` 0 = right, 1 = left).
+
+    Both directions use one growing frame: `_ts` ascending for backward,
+    descending for forward, with right rows first at equal `_ts` so ties
+    match. Spark evaluates unboundedPreceding..currentRow as a running
+    aggregate, O(n) per window partition. The struct is non-NULL even
+    when its fields are NULL, so a matched NULL value is kept. NULL `_ts`
+    rows sort first and match nothing, as long as the caller drops right
+    rows whose `_ts` is NULL.
+    """
+    ts = F.col("_ts").desc_nulls_first() if forward else F.col("_ts").asc_nulls_first()
+    w = (
+        W.partitionBy(*pc)
+        .orderBy(ts, F.col("_side").asc())
+        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    )
+    return F.last("_match", ignorenulls=True).over(w)
+
+
 def asof_join(
     left: DataFrame,
     right: DataFrame,
@@ -194,58 +215,39 @@ def asof_join(
     forward  -> first right row with right_ts >= left_ts
     backward -> last  right row with right_ts <= left_ts
     (J3 uses forward: first tide sample after the image date,
-    SDS_tools.py:669-676.)
+    SDS_tools.py:669-676.) The matched row's values are returned as they
+    are, NULLs included. A NULL `left_ts` matches nothing, and right rows
+    with a NULL `right_ts` are ignored.
 
-    Scale: with no `bucket_seconds` the window sorts within
-    `partition_cols` only — fine when each key's series fits a partition.
-    For one global dense series (the tide table) pass `bucket_seconds`
-    larger than the right series' max gap: both sides are hashed into
-    time buckets and each right row is replicated into the adjacent
-    bucket, so the running fill is exact across bucket boundaries while
-    the sort stays fully parallel.
+    Scale: the cost is one sort plus a linear scan per window partition
+    (see `_running_match`). With no `bucket_seconds` a window partition
+    is one key of `partition_cols`, fine when each key's series fits a
+    task. For one global dense series (the tide table) pass
+    `bucket_seconds` larger than the right series' max gap: both sides
+    are hashed into time buckets and each right row is replicated into
+    the adjacent bucket, so the fill stays exact across bucket boundaries
+    while the buckets sort and scan in parallel.
     """
+    forward = direction == "forward"
     pc = list(partition_cols or [])
     lt = left.withColumn("_ts", F.col(left_ts)).withColumn("_side", F.lit(1))
-    rt = (
-        right.select(
-            *pc, F.col(right_ts).alias("_ts"), *[F.col(c) for c in value_cols]
-        ).withColumn("_side", F.lit(0))
+    rt = right.filter(F.col(right_ts).isNotNull()).select(
+        *pc,
+        F.col(right_ts).alias("_ts"),
+        F.struct(*value_cols).alias("_match"),
+        F.lit(0).alias("_side"),
     )
     if bucket_seconds is not None:
         bkt = F.floor(F.col("_ts").cast("double") / F.lit(float(bucket_seconds)))
         lt = lt.withColumn("_bkt", bkt)
-        shift = F.lit(-1) if direction == "forward" else F.lit(1)
-        rt = rt.withColumn("_bkt", F.explode(F.array(bkt, bkt + shift)))
+        rt = rt.withColumn("_bkt", F.explode(F.array(bkt, bkt + (-1 if forward else 1))))
         pc = pc + ["_bkt"]
-    for c in left.columns:
-        if c not in rt.columns:
-            rt = rt.withColumn(c, F.lit(None).cast(left.schema[c].dataType))
-    for c in value_cols:
-        if c not in lt.columns:
-            lt = lt.withColumn(c, F.lit(None).cast(rt.schema[c].dataType))
-    u = lt.select(rt.columns).unionByName(rt.select(rt.columns))
-    if direction == "forward":
-        # right rows sort after left at equal ts so the forward frame
-        # (currentRow..following) includes them -> >= semantics
-        w = (
-            W.partitionBy(*pc)
-            .orderBy(F.col("_ts").asc(), F.col("_side").desc())
-            .rowsBetween(W.currentRow, W.unboundedFollowing)
-        )
-        filled = [F.first(F.when(F.col("_side") == 0, F.col(c)), ignorenulls=True).over(w).alias(c) for c in value_cols]
-    else:
-        # right rows sort before left at equal ts -> <= semantics
-        w = (
-            W.partitionBy(*pc)
-            .orderBy(F.col("_ts").asc(), F.col("_side").asc())
-            .rowsBetween(W.unboundedPreceding, W.currentRow)
-        )
-        filled = [F.last(F.when(F.col("_side") == 0, F.col(c)), ignorenulls=True).over(w).alias(c) for c in value_cols]
-    keep = [c for c in left.columns]
+    keep = [c for c in left.columns if c not in value_cols]
     return (
-        u.select(*[F.col(c) for c in keep if c not in value_cols], "_side", *filled)
+        lt.unionByName(rt, allowMissingColumns=True)
+        .select(*keep, "_side", _running_match(pc, forward).alias("_match"))
         .filter(F.col("_side") == 1)
-        .drop("_side")
+        .select(*keep, *[F.col("_match")[c].alias(c) for c in value_cols])
     )
 
 
@@ -275,46 +277,29 @@ def validation_join(
     Implemented as two as-of passes (backward + forward) in one tagged
     union + window plan, then a when() cascade — no Python.
     """
-    su = survey.select(
+    lt = sat.select(
+        "transect", F.col(time_col).alias("_ts"), "chainage", F.lit(1).alias("_side")
+    )
+    rt = survey.filter(F.col("ts").isNotNull()).select(
         "transect",
-        F.col("ts").alias("_sts"),
-        F.col("chainage").alias("_sval"),
+        F.col("ts").alias("_ts"),
+        F.struct(F.col("ts"), F.col("chainage").alias("val")).alias("_match"),
+        F.lit(0).alias("_side"),
     )
-    lt = (
-        sat.select("transect", F.col(time_col).alias("_ts"), "chainage")
-        .withColumn("_side", F.lit(1))
-        .withColumn("_sts", F.lit(None).cast("timestamp"))
-        .withColumn("_sval", F.lit(None).cast("double"))
-    )
-    rt = (
-        su.select(
-            "transect",
-            F.col("_sts").alias("_ts"),
-            F.lit(None).cast("double").alias("chainage"),
-            F.lit(0).alias("_side"),
-            "_sts",
-            "_sval",
-        )
-    )
-    u = lt.select(rt.columns).unionByName(rt)
     # inclusive both ways: equal-ts survey rows are visible to both fills
-    wb = (
-        W.partitionBy("transect")
-        .orderBy(F.col("_ts").asc(), F.col("_side").asc())
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    wf = (
-        W.partitionBy("transect")
-        .orderBy(F.col("_ts").asc(), F.col("_side").desc())
-        .rowsBetween(W.currentRow, W.unboundedFollowing)
-    )
-    is_r = F.col("_side") == 0
     d = (
-        u.withColumn("_b_ts", F.last(F.when(is_r, F.col("_sts")), ignorenulls=True).over(wb))
-        .withColumn("_b_val", F.last(F.when(is_r, F.col("_sval")), ignorenulls=True).over(wb))
-        .withColumn("_a_ts", F.first(F.when(is_r, F.col("_sts")), ignorenulls=True).over(wf))
-        .withColumn("_a_val", F.first(F.when(is_r, F.col("_sval")), ignorenulls=True).over(wf))
+        lt.unionByName(rt, allowMissingColumns=True)
+        .select(
+            "transect", "_ts", "chainage", "_side",
+            _running_match(["transect"], forward=False).alias("_b"),
+            _running_match(["transect"], forward=True).alias("_a"),
+        )
         .filter(F.col("_side") == 1)
+        .select(
+            "transect", "_ts", "chainage",
+            F.col("_b.ts").alias("_b_ts"), F.col("_b.val").alias("_b_val"),
+            F.col("_a.ts").alias("_a_ts"), F.col("_a.val").alias("_a_val"),
+        )
     )
     db = F.datediff(F.col("_ts").cast("date"), F.col("_b_ts").cast("date"))
     da = F.datediff(F.col("_a_ts").cast("date"), F.col("_ts").cast("date"))

@@ -1,5 +1,6 @@
-"""Time-series operators: as-of vs merge_asof, despike parity, seasonal
-DJF rule, validation-join band semantics, session dedup."""
+"""Time-series operators: as-of vs merge_asof (bucket edges, ties, NULLs,
+running-frame plans), despike parity, seasonal DJF rule, validation-join
+band semantics, session dedup."""
 
 import numpy as np
 import pandas as pd
@@ -7,6 +8,22 @@ from pyspark.sql import functions as F
 
 from coastsat_spark import kernels
 from coastsat_spark.operators import timeseries as TS
+
+
+def _merge_asof(left, right, direction, **kw):
+    return pd.merge_asof(
+        left.sort_values("lts"), right.sort_values("rts"),
+        left_on="lts", right_on="rts", direction=direction, **kw,
+    ).sort_values("k").reset_index(drop=True)
+
+
+def _spark_asof(ldf, rdf, value_cols, direction, **kw):
+    return (
+        TS.asof_join(ldf, rdf, "lts", "rts", value_cols, direction=direction, **kw)
+        .toPandas()
+        .sort_values("k")
+        .reset_index(drop=True)
+    )
 
 
 def test_asof_forward_backward_match_pandas(spark):
@@ -20,25 +37,12 @@ def test_asof_forward_backward_match_pandas(spark):
     left = pd.DataFrame({"lts": lts, "k": np.arange(300)})
     right = pd.DataFrame({"rts": rts, "val": rng.normal(size=500)}).drop_duplicates("rts")
     ldf, rdf = spark.createDataFrame(left), spark.createDataFrame(right)
-    for direction, pd_dir in (("forward", "forward"), ("backward", "backward")):
+    for direction in ("forward", "backward"):
         # bucket must exceed the right series' max gap (~1.2e5 s here)
         for bucket in (None, 500_000.0):
-            got = (
-                TS.asof_join(
-                    ldf, rdf, "lts", "rts", ["val"], direction=direction,
-                    bucket_seconds=bucket,
-                )
-                .toPandas()
-                .sort_values("k")
-                .reset_index(drop=True)
-            )
-            exp = pd.merge_asof(
-                left.sort_values("lts"), right.sort_values("rts"),
-                left_on="lts", right_on="rts", direction=pd_dir,
-            ).sort_values("k").reset_index(drop=True)
-            a, b = got["val"].to_numpy(), exp["val"].to_numpy()
-            mask = ~(np.isnan(a) & np.isnan(b))
-            assert np.allclose(a[mask], b[mask]), (direction, bucket)
+            got = _spark_asof(ldf, rdf, ["val"], direction, bucket_seconds=bucket)
+            exp = _merge_asof(left, right, direction)
+            assert np.allclose(got["val"], exp["val"], equal_nan=True), (direction, bucket)
 
 
 def test_asof_equal_ts_inclusive(spark):
@@ -50,6 +54,129 @@ def test_asof_equal_ts_inclusive(spark):
     fwd = TS.asof_join(ldf, rdf, "lts", "rts", ["val"], "forward").collect()[0]["val"]
     bwd = TS.asof_join(ldf, rdf, "lts", "rts", ["val"], "backward").collect()[0]["val"]
     assert fwd == 2.0 and bwd == 2.0  # >= and <= both include the tie
+
+
+def _physical_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString().lower()
+
+
+def test_asof_and_validation_plans_use_growing_frames_only(spark):
+    # the unboundedFollowing frame is recomputed per row (quadratic per
+    # window partition); every fill must be unboundedPreceding..currentRow
+    left = spark.createDataFrame(
+        pd.DataFrame({"lts": pd.to_datetime(["2021-01-02"]), "k": [0]})
+    )
+    right = spark.createDataFrame(
+        pd.DataFrame({"rts": pd.to_datetime(["2021-01-01"]), "val": [1.0]})
+    )
+    plans = [
+        _physical_plan(TS.asof_join(left, right, "lts", "rts", ["val"], d, bucket_seconds=b))
+        for d in ("forward", "backward")
+        for b in (None, 86400.0)
+    ]
+    sat = pd.DataFrame(
+        {"transect": ["A"], "scene_month": pd.to_datetime(["2021-01-02"]), "chainage": [1.0]}
+    )
+    survey = pd.DataFrame(
+        {"transect": ["A"], "ts": pd.to_datetime(["2021-01-01"]), "chainage": [2.0]}
+    )
+    plans.append(
+        _physical_plan(
+            TS.validation_join(spark.createDataFrame(sat), spark.createDataFrame(survey))
+        )
+    )
+    for plan in plans:
+        assert "unboundedpreceding" in plan
+        assert "unboundedfollowing" not in plan
+
+
+def test_asof_bucketed_boundary_next_bucket_and_ties(spark):
+    # 2 h buckets (> the 90 min max right gap) start at even UTC hours
+    t = lambda hm: pd.Timestamp("2021-01-01 " + hm)  # noqa: E731
+    right = pd.DataFrame(
+        {"rts": [t("02:00"), t("03:00"), t("04:00"), t("05:30")], "val": [1.0, 2.0, 3.0, 4.0]}
+    )
+    lts = ["01:00", "02:00", "02:30", "03:00", "03:30", "04:00", "04:10", "06:00"]
+    left = pd.DataFrame({"lts": [t(x) for x in lts], "k": np.arange(len(lts))})
+    ldf, rdf = spark.createDataFrame(left), spark.createDataFrame(right)
+    fwd = _spark_asof(ldf, rdf, ["val"], "forward", bucket_seconds=7200.0)["val"]
+    # 01:00 and 03:30 match a right row on the next bucket's first instant;
+    # 02:00, 03:00 and 04:00 tie a right row exactly
+    assert fwd[:7].tolist() == [1.0, 1.0, 2.0, 2.0, 3.0, 3.0, 4.0]
+    assert pd.isna(fwd[7])
+    for direction in ("forward", "backward"):
+        got = _spark_asof(ldf, rdf, ["val"], direction, bucket_seconds=7200.0)
+        exp = _merge_asof(left, right, direction)
+        pd.testing.assert_series_equal(got["val"], exp["val"], check_names=False)
+
+
+def test_asof_keeps_matched_null_value(spark):
+    rdf = spark.createDataFrame(
+        [
+            (pd.Timestamp("2021-01-01 00:00").to_pydatetime(), 1.0),
+            (pd.Timestamp("2021-01-01 01:00").to_pydatetime(), None),
+            (pd.Timestamp("2021-01-01 02:00").to_pydatetime(), 3.0),
+        ],
+        "rts timestamp, val double",
+    )
+    left = pd.DataFrame(
+        {"lts": pd.to_datetime(["2021-01-01 00:30", "2021-01-01 01:30"]), "k": [0, 1]}
+    )
+    ldf = spark.createDataFrame(left)
+    for bucket in (None, 7200.0):
+        fwd = _spark_asof(ldf, rdf, ["val"], "forward", bucket_seconds=bucket)["val"]
+        bwd = _spark_asof(ldf, rdf, ["val"], "backward", bucket_seconds=bucket)["val"]
+        # the 01:00 row matches (after 00:30, before 01:30) and its NULL
+        # is returned, not the next/previous non-NULL value
+        assert pd.isna(fwd[0]) and fwd[1] == 3.0, bucket
+        assert bwd[0] == 1.0 and pd.isna(bwd[1]), bucket
+
+
+def test_asof_null_timestamps_match_nothing(spark):
+    ldf = spark.createDataFrame(
+        [(None, 0), (pd.Timestamp("2021-01-01 00:30").to_pydatetime(), 1)],
+        "lts timestamp, k long",
+    )
+    rdf = spark.createDataFrame(
+        [(None, 9.0), (pd.Timestamp("2021-01-01 01:00").to_pydatetime(), 1.0)],
+        "rts timestamp, val double",
+    )
+    for bucket in (None, 7200.0):
+        fwd = _spark_asof(ldf, rdf, ["val"], "forward", bucket_seconds=bucket)["val"]
+        bwd = _spark_asof(ldf, rdf, ["val"], "backward", bucket_seconds=bucket)["val"]
+        # the NULL-ts left row matches nothing; the NULL-ts right row is
+        # not a backward match for 00:30
+        assert pd.isna(fwd[0]) and fwd[1] == 1.0, bucket
+        assert pd.isna(bwd[0]) and pd.isna(bwd[1]), bucket
+
+
+def test_asof_two_value_cols_by_key_match_pandas(spark):
+    rng = np.random.default_rng(5)
+    base = pd.Timestamp("2021-01-01")
+    left = pd.DataFrame(
+        {
+            "lts": base + pd.to_timedelta(rng.integers(0, 10**6, 200), unit="s"),
+            "g": rng.integers(0, 3, 200),
+            "k": np.arange(200),
+        }
+    )
+    right = pd.DataFrame(
+        {
+            "rts": base + pd.to_timedelta(rng.integers(0, 10**6, 400), unit="s"),
+            "g": rng.integers(0, 3, 400),
+            "val": rng.normal(size=400),
+            "tag": rng.integers(0, 1000, 400),
+        }
+    ).drop_duplicates(["g", "rts"])
+    ldf, rdf = spark.createDataFrame(left), spark.createDataFrame(right)
+    for direction in ("forward", "backward"):
+        got = _spark_asof(ldf, rdf, ["val", "tag"], direction, partition_cols=["g"])
+        assert got.columns.tolist() == ["lts", "g", "k", "val", "tag"]
+        exp = _merge_asof(left, right, direction, by="g")
+        assert np.allclose(got["val"], exp["val"], equal_nan=True), direction
+        assert np.array_equal(got["tag"].isna(), exp["tag"].isna()), direction
+        hit = got["tag"].notna()
+        assert (got["tag"][hit] == exp["tag"][hit]).all(), direction
 
 
 def test_despike_spark_matches_kernel(spark):
@@ -145,6 +272,23 @@ def test_validation_join_bands(spark):
     assert pd.isna(out["survey_chainage"][2])
     # 06-01: >10 days from everything -> null
     assert pd.isna(out["survey_chainage"][3])
+
+
+def test_validation_join_keeps_nearest_survey_null(spark):
+    sat = spark.createDataFrame(
+        [("A", pd.Timestamp("2021-01-10").to_pydatetime(), 10.0)],
+        "transect string, scene_month timestamp, chainage double",
+    )
+    survey = spark.createDataFrame(
+        [
+            ("A", pd.Timestamp("2021-01-08").to_pydatetime(), 5.0),
+            ("A", pd.Timestamp("2021-01-09").to_pydatetime(), None),
+        ],
+        "transect string, ts timestamp, chainage double",
+    )
+    out = TS.validation_join(sat, survey).collect()
+    # the closest survey (01-09) is NULL: its value, not the 01-08 one
+    assert len(out) == 1 and out[0]["survey_chainage"] is None
 
 
 def test_dedup_close_timestamps_keeps_best(spark):

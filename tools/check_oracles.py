@@ -7,15 +7,19 @@ Usage: python tools/check_oracles.py [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
+from pathlib import Path
 
 import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
-
-import os
+# import the checkout this script lives in, in the driver and in the
+# Python workers Spark starts, whatever the working directory
+ROOT = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")]))
 
 # the driver gate runs at sf0.01; override to sweep OTHER scales for
 # latent sf-dependence in the mirrors (the despike_tide tide-span bug
