@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Iterator
+from pathlib import Path
 
 import numpy as np
 import pandas as pd
@@ -284,7 +285,12 @@ def tides_df(spark, start_s: int = TS_START_S, span_s: int = TS_SPAN_S, step_s: 
     return spark.range(0, n).select(t.alias("ts"), tide.alias("tide"))
 
 
-def webpages_path(sf: float, base_dir: str = "/root/repo/data") -> str:
+# generated tables and checkpoints live beside the package, in the
+# checkout it is imported from
+DATA_DIR = str(Path(__file__).resolve().parents[1] / "data")
+
+
+def webpages_path(sf: float, base_dir: str = DATA_DIR) -> str:
     # one canonical dir per scale: 16 and 16.0 must resolve identically,
     # or a float-parsed CLI arg silently regenerates a 20 GB table into
     # "webpages_sf16.0" beside the existing "webpages_sf16" (this
@@ -294,7 +300,7 @@ def webpages_path(sf: float, base_dir: str = "/root/repo/data") -> str:
     return os.path.join(base_dir, f"webpages_sf{sf_txt}")
 
 
-def ensure_webpages(spark, sf: float, base_dir: str = "/root/repo/data") -> str:
+def ensure_webpages(spark, sf: float, base_dir: str = DATA_DIR) -> str:
     """Materialize the webpages table at `sf` as parquet (idempotent).
 
     Layout mirrors the Iceberg design: partitioned by `warc_month`

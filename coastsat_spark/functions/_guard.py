@@ -1,7 +1,7 @@
 """Decode-side dimension sanity guard, shared by the codecs.
 
 Output buffers are allocated from header-DECLARED dimensions, so a
-corrupt/hostile header (e.g. a JPEG SOF reading 65535x65535) would
+corrupt/hostile header (e.g. a BMP or TIFF reading 65535x65535) would
 demand a multi-GB allocation before any data-driven error fires —
 a memory-DoS against executors processing untrusted corpora under
 on_error='skip'. Every decoder checks declared dims against this cap

@@ -1,8 +1,7 @@
 """FLAC codec in pure NumPy/stdlib: decode + lossless encode.
 
-Like the other codecs in this package (jpeg.py, png.py, gif.py,
-tiff.py, audio.py) this is a real implementation of the public format
-spec (the xiph.org FLAC format, as shipped in libFLAC and RFC-drafted
+Like the other codecs in this package (png.py, tiff.py, audio.py)
+this is a real implementation of the public format spec (the xiph.org FLAC format, as shipped in libFLAC and RFC-drafted
 for IETF cellar), not a library binding — the sandbox has no audio
 libraries and the oracle needs bit-reproducible output.
 

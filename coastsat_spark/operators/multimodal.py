@@ -13,13 +13,9 @@ REAL codecs (pure-NumPy struct parsing, no libraries needed):
   - FLAC: full decoder (all subframe types incl. LPC, rice/rice2
     partitions, 4 stereo modes, CRC-8/16 + MD5 verify) and lossless
     encoder (functions/flac.py); this surface downmixes to mono int16;
-  - JPEG: baseline sequential (SOF0) AND progressive (SOF2: spectral
-    selection, successive approximation, EOB runs) DCT
-    (functions/jpeg.py — Huffman, quant, zigzag, IDCT, 4:4:4/4:2:0,
-    restart markers) — encode + decode;
-  - PNG: 8-bit grey/RGB/RGBA/palette, all five scanline filters,
-    CRC-validated (functions/png.py; DEFLATE via stdlib zlib) —
-    encode + decode;
+  - PNG: bit depths 1-16, grey/RGB/RGBA/palette, all five scanline
+    filters, Adam7 interlacing, CRC-validated (functions/png.py;
+    DEFLATE via stdlib zlib) — encode + decode;
   - TIFF/GeoTIFF: strips + tiles, none/LZW/Deflate/PackBits,
     predictor 2, 8/16/32/64-bit uint/int/float samples, both byte
     orders, GeoTIFF georeferencing (functions/tiff.py) — encode +
@@ -28,12 +24,11 @@ REAL codecs (pure-NumPy struct parsing, no libraries needed):
     (SDS_preprocess.py:66-200 preprocess_single); `geotiff_pixels`
     below is that ingest re-expressed as a UDTF-shaped mapInPandas;
   - AVI: RIFF video (chunk-walking parser) — uncompressed 24-bit DIB
-    ('00db' frames with BMP row conventions) AND motion-JPEG ('MJPG',
-    per-frame JPEGs through the pure-NumPy codec) — encode + decode,
-    with `video_frame_features` frame sampling.
-PNG covers bit depths 1-16 and Adam7 interlacing (functions/png.py).
-Arithmetic-coded/12-bit JPEG, perceptual audio codecs (MP3/AAC/...) and
-inter-frame video codecs stay honestly STUBBED with NotImplementedError.
+    ('00db' frames with BMP row conventions) — encode + decode, with
+    `video_frame_features` frame sampling.
+Every other format (JPEG, GIF, WebP, MP3/AAC, motion-JPEG and other
+compressed AVI streams) raises NotImplementedError, which
+`on_error='skip'` quarantines and `media_decode_errors` reports.
 
 A deterministic FAKE container format remains supported for tests:
   image: b"FIMG|" + w(le32) + h(le32) + c(le32) + w*h*c raw bytes
@@ -176,21 +171,12 @@ def decode_wav(payload: bytes) -> tuple[int, np.ndarray]:
 
 
 def decode_image_bytes(payload: bytes) -> np.ndarray:
-    """Decode an image payload to (h, w, c) uint8: real BMP, JPEG
-    (baseline + progressive), PNG parsing (all PNG depths/interlace;
-    16-bit samples are downshifted to the top byte to keep the uint8
-    contract) and GIF (first composited frame; functions/gif.py decodes
-    full animations), the FIMG fake container for tests; codec variants
-    beyond those (arithmetic-coded JPEG, ...) stay unimplemented loudly."""
-    if payload is None:
-        return None
+    """Decode an image payload to (h, w, c) uint8: real BMP, PNG (all
+    PNG depths/interlace; 16-bit samples are downshifted to the top byte
+    to keep the uint8 contract) and uint8 TIFF parsing, the FIMG fake
+    container for tests; any other codec raises NotImplementedError."""
     if payload.startswith(b"BM"):
         return decode_bmp(payload)
-    if payload.startswith(b"\xff\xd8"):
-        from ..functions.jpeg import decode_jpeg
-
-        img = decode_jpeg(payload)
-        return img if img.ndim == 3 else img[:, :, None]
     if payload.startswith(b"\x89PNG"):
         from ..functions.png import decode_png
 
@@ -198,11 +184,6 @@ def decode_image_bytes(payload: bytes) -> np.ndarray:
         if img.dtype == np.uint16:
             img = (img >> 8).astype(np.uint8)
         return img if img.ndim == 3 else img[:, :, None]
-    if payload[:6] in (b"GIF87a", b"GIF89a"):
-        from ..functions.gif import decode_gif
-
-        frames, _ = decode_gif(payload)
-        return frames[0]
     if payload[:4] in (b"II\x2a\x00", b"MM\x00\x2a"):
         from ..functions.tiff import decode_tiff
 
@@ -219,19 +200,16 @@ def decode_image_bytes(payload: bytes) -> np.ndarray:
         return np.frombuffer(payload, dtype=np.uint8, count=w * h * c, offset=off).reshape(h, w, c)
     raise NotImplementedError(
         "unsupported image codec in this container; "
-        "expected BMP, JPEG, PNG, GIF, TIFF or FIMG"
+        "expected BMP, PNG, TIFF or FIMG"
     )
 
 
 def decode_audio_bytes(payload: bytes) -> tuple[int, np.ndarray]:
     """Decode an audio payload to (sample_rate, int16 mono samples): real
-    WAV and FLAC parsing, the FAUD fake container for tests; perceptual
-    codecs (MP3/AAC/...) stay unimplemented. FLAC stereo is downmixed
-    (l+r)>>1 and non-16-bit depths are shifted to 16 for this mono-int16
-    surface — `functions.flac.decode_flac` is the exact multi-channel
-    API."""
-    if payload is None:
-        return None
+    WAV and FLAC parsing, the FAUD fake container for tests; any other
+    codec raises NotImplementedError. FLAC stereo is downmixed (l+r)>>1
+    and non-16-bit depths are shifted to 16 for this mono-int16 surface
+    — `functions.flac.decode_flac` is the exact multi-channel API."""
     if payload.startswith(b"RIFF"):
         return decode_wav(payload)
     if payload.startswith(b"fLaC"):
@@ -251,7 +229,7 @@ def decode_audio_bytes(payload: bytes) -> tuple[int, np.ndarray]:
         off = len(AUDIO_MAGIC) + 8
         return sr, np.frombuffer(payload, dtype="<i2", count=n, offset=off)
     raise NotImplementedError(
-        "perceptual audio codecs unavailable in this container; "
+        "unsupported audio codec in this container; "
         "expected WAV, FLAC or FAUD"
     )
 
@@ -263,33 +241,6 @@ def make_bmp_image(idx: int, w: int = 16, h: int = 12) -> bytes:
         np.uint8
     )
     return encode_bmp(px.reshape(h, w, 3))
-
-
-def make_jpeg_image(
-    idx: int, w: int = 16, h: int = 12, quality: int = 90, progressive: bool = False
-) -> bytes:
-    """Deterministic REAL JPEG payload (baseline, or SOF2 progressive
-    with `progressive=True`). Pixels are a smooth per-idx gradient
-    rather than the hash noise of make_bmp_image: JPEG is lossy, so
-    payload tests pin decoded stats within PSNR bounds, and smooth
-    content keeps those bounds tight."""
-    from ..functions.jpeg import encode_jpeg
-
-    yy, xx = np.mgrid[0:h, 0:w].astype(np.float64)
-    base = (idx % 97) * 1.3
-    img = np.stack(
-        [
-            128 + 80 * np.sin(xx / 7.0 + base),
-            128 + 60 * np.cos(yy / 5.0 + base),
-            128 + 50 * np.sin((xx + yy) / 9.0 + base),
-        ],
-        axis=-1,
-    )
-    return encode_jpeg(
-        np.clip(img, 0, 255).astype(np.uint8),
-        quality=quality,
-        progressive=progressive,
-    )
 
 
 def make_wav_audio(idx: int, sr: int = 8000, n: int = 1600, codec: str = "pcm") -> bytes:
@@ -361,8 +312,8 @@ def _check_on_error(on_error: str) -> None:
 def image_features(media: DataFrame, on_error: str = "raise") -> DataFrame:
     """Per-image channel means via mapInPandas (Arrow batches of binary).
 
-    The decode step is the stub; batch shape, schema and partitioning are
-    the production plumbing. `on_error='skip'` drops undecodable rows
+    Each payload is decoded by `decode_image_bytes` inside the Arrow
+    batch. `on_error='skip'` drops undecodable rows
     instead of failing the task (see note above; pair with
     `media_decode_errors` to audit what was dropped).
     """
@@ -461,8 +412,8 @@ def resize_images(
         for pdf in batches:
             rows = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                raw = bytes(payload)
                 try:
+                    raw = bytes(payload)
                     im = decode_image_bytes(raw)
                 except Exception:
                     if on_error == "raise":
@@ -555,17 +506,10 @@ def media_decode_errors(media: DataFrame) -> DataFrame:
 _AVI_STREAM = 83
 
 
-_MJPG_FOURCC = 0x47504A4D  # 'MJPG' little-endian, biCompression tag
-
-
-def encode_avi(
-    frames: np.ndarray, fps: int = 5, codec: str = "DIB", quality: int = 90
-) -> bytes:
-    """Encode (n, h, w, 3) uint8 RGB frames as a RIFF AVI. codec='DIB'
-    writes uncompressed 24-bit bottom-up BGR '00db' frames (the same row
-    convention as BMP); codec='MJPG' writes motion-JPEG — each frame an
-    independent baseline JPEG in a '00dc' chunk, the standard intra-only
-    compressed-AVI profile. Pure struct packing."""
+def encode_avi(frames: np.ndarray, fps: int = 5) -> bytes:
+    """Encode (n, h, w, 3) uint8 RGB frames as a RIFF AVI of uncompressed
+    24-bit bottom-up BGR '00db' frames (the same row convention as BMP).
+    Pure struct packing."""
     frames = np.asarray(frames)
     n, h, w, _ = frames.shape
     rowsize = (w * 3 + 3) & ~3
@@ -576,22 +520,12 @@ def encode_avi(
     def lst(kind: bytes, payload: bytes) -> bytes:
         return chunk(b"LIST", kind + payload)
 
-    if codec == "MJPG":
-        from ..functions.jpeg import encode_jpeg
-
-        frame_bytes = [encode_jpeg(f, quality=quality) for f in frames]
-        dsize = max(len(fb) for fb in frame_bytes)
-        handler, comp_tag, chunk_id = b"MJPG", _MJPG_FOURCC, b"00dc"
-    elif codec == "DIB":
-        frame_bytes = []
-        for f in frames:
-            rows = np.zeros((h, rowsize), dtype=np.uint8)
-            rows[:, : w * 3] = f[::-1, :, ::-1].reshape(h, w * 3)  # bottom-up, BGR
-            frame_bytes.append(rows.tobytes())
-        dsize = rowsize * h
-        handler, comp_tag, chunk_id = b"DIB ", 0, b"00db"
-    else:
-        raise ValueError(f"unknown AVI codec {codec!r} (DIB or MJPG)")
+    frame_bytes = []
+    for f in frames:
+        rows = np.zeros((h, rowsize), dtype=np.uint8)
+        rows[:, : w * 3] = f[::-1, :, ::-1].reshape(h, w * 3)  # bottom-up, BGR
+        frame_bytes.append(rows.tobytes())
+    dsize = rowsize * h
 
     avih = struct.pack(
         "<IIIIIIIIIIIIII",
@@ -599,15 +533,15 @@ def encode_avi(
     )
     strh = struct.pack(
         "<4s4sIHHIIIIIIIIhhhh",
-        b"vids", handler, 0, 0, 0, 0, 1, fps, 0, n, dsize, 0xFFFFFFFF, 0, 0, 0, int(w), int(h),
+        b"vids", b"DIB ", 0, 0, 0, 0, 1, fps, 0, n, dsize, 0xFFFFFFFF, 0, 0, 0, int(w), int(h),
     )
-    strf = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, comp_tag, dsize, 0, 0, 0, 0)
+    strf = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, dsize, 0, 0, 0, 0)
     hdrl = lst(b"hdrl", chunk(b"avih", avih) + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)))
-    movi = lst(b"movi", b"".join(chunk(chunk_id, fb) for fb in frame_bytes))
+    movi = lst(b"movi", b"".join(chunk(b"00db", fb) for fb in frame_bytes))
     idx_entries = []
     off = 4  # offsets within movi, relative to the 'movi' fourcc
     for fb in frame_bytes:
-        idx_entries.append(struct.pack("<4sIII", chunk_id, 0x10, off, len(fb)))
+        idx_entries.append(struct.pack("<4sIII", b"00db", 0x10, off, len(fb)))
         off += 8 + len(fb) + (len(fb) & 1)
     idx1 = chunk(b"idx1", b"".join(idx_entries))
     return chunk(b"RIFF", b"AVI " + hdrl + movi + idx1)
@@ -615,10 +549,8 @@ def encode_avi(
 
 def decode_avi(payload: bytes) -> tuple[int, np.ndarray]:
     """Decode an AVI to (fps, (n, h, w, 3) uint8 RGB). Chunk-walking
-    parser; supports uncompressed 24-bit DIB and motion-JPEG ('MJPG'
-    biCompression — per-frame baseline/progressive JPEG via the
-    pure-NumPy codec); other compressed vids streams stay
-    NotImplementedError."""
+    parser; supports uncompressed 24-bit DIB only — compressed vids
+    streams (motion-JPEG, ...) raise NotImplementedError."""
     if payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
         raise NotImplementedError("not a RIFF AVI container")
     fps, w, h, bpp, comp = None, None, None, 24, 0
@@ -644,25 +576,8 @@ def decode_avi(payload: bytes) -> tuple[int, np.ndarray]:
     walk(12, len(payload))
     if w is None or not frames:
         raise NotImplementedError("AVI has no vids stream format / frames")
-    if comp == _MJPG_FOURCC:
-        from ..functions.jpeg import decode_jpeg
-
-        h_abs = abs(h)
-        check_dims(w, h_abs, "AVI strf", frames=len(frames))
-        out = np.empty((len(frames), h_abs, w, 3), dtype=np.uint8)
-        for i, fb in enumerate(frames):
-            img = decode_jpeg(bytes(fb))
-            if img.ndim == 2:
-                img = np.repeat(img[:, :, None], 3, axis=2)
-            if img.shape[:2] != (h_abs, w):
-                raise NotImplementedError(
-                    f"MJPG frame {i} is {img.shape[1]}x{img.shape[0]}, "
-                    f"strf declares {w}x{h_abs}"
-                )
-            out[i] = img[:, :, :3]
-        return fps, out
     if bpp != 24 or comp != 0:
-        raise NotImplementedError(f"only 24-bit DIB or MJPG AVI (bpp={bpp}, comp={comp})")
+        raise NotImplementedError(f"only 24-bit DIB AVI (bpp={bpp}, comp={comp})")
     bottom_up = h > 0  # negative biHeight = top-down DIB (same as decode_bmp)
     h = abs(h)
     check_dims(w, h, "AVI strf", frames=len(frames))
@@ -704,10 +619,10 @@ def video_table(spark, n: int = 100) -> DataFrame:
 def video_frame_features(
     videos: DataFrame, every: int = 2, on_error: str = "raise"
 ) -> DataFrame:
-    """Frame-sample video payloads: decode the AVI (or animated GIF),
-    keep every k-th frame, emit per-frame channel means + brightness
-    (UDTF-shaped mapInPandas: one binary row -> n_frames/k feature rows
-    — the video analog of audio_frame_samples)."""
+    """Frame-sample video payloads: decode the AVI, keep every k-th
+    frame, emit per-frame channel means + brightness (UDTF-shaped
+    mapInPandas: one binary row -> n_frames/k feature rows — the video
+    analog of audio_frame_samples)."""
     _check_on_error(on_error)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -715,13 +630,7 @@ def video_frame_features(
             rows = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
                 try:
-                    raw = bytes(payload)
-                    if raw[:6] in (b"GIF87a", b"GIF89a"):
-                        from ..functions.gif import decode_gif
-
-                        frames, _delays = decode_gif(raw)
-                    else:
-                        _fps, frames = decode_avi(raw)
+                    _fps, frames = decode_avi(bytes(payload))
                 except Exception:
                     if on_error == "raise":
                         raise

@@ -4,7 +4,8 @@ Pipeline shape (the two-shuffle plan of SURVEY.md §3 EP2):
 
   docs --(shuffle 1: groupBy tile,scene,px)--> pixel aggregates (JVM,
   partial+final hash agg — raw docs never cross into Python) --(shuffle 2:
-  groupBy tile,scene)--> applyInPandas(extract) --> shoreline points.
+  repartition + sortWithinPartitions by tile,scene)--> one mapInPandas that
+  walks the sorted scene groups (extract) --> shoreline points.
 
 The Python stage receives at most GRID*GRID rows per scene (64 for the
 default 8x8 grid), so executor memory is bounded regardless of how many

@@ -29,7 +29,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-DEFAULT_ROOT = "/root/repo/data/checkpoints"
+from ..datagen import DATA_DIR
+
+DEFAULT_ROOT = os.path.join(DATA_DIR, "checkpoints")
 
 
 def _marker(path: str) -> str:

@@ -3,7 +3,7 @@
     docs --(map: geo/bands/tiles, no shuffle)--> prepared
          --(shuffle 1: pixel agg, JVM)--> pixels
          --(scene gates, JVM)--> kept scenes
-         --(shuffle 2: scene groups -> applyInPandas)--> shoreline points
+         --(shuffle 2: repartition + sort by scene -> mapInPandas)--> shoreline points
          --(broadcast theta-join, no shuffle)--> transect pairs
          --(shuffle 3: (transect, scene) agg)--> chainage time series
          --(despike / as-of tide join / corrections / averages)--> products

@@ -13,8 +13,6 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from coastsat_spark.functions.flac import encode_flac
-from coastsat_spark.functions.gif import encode_gif
-from coastsat_spark.functions.jpeg import encode_jpeg
 from coastsat_spark.functions.png import encode_png
 from coastsat_spark.functions.tiff import encode_geotiff
 from coastsat_spark.operators import multimodal as MM
@@ -31,27 +29,13 @@ def _decoders():
     sr, n = 8000, 64
     samples = (np.sin(np.arange(n)) * 1000).astype(np.int16)
     return {
-        "jpeg": (encode_jpeg(img), MM.decode_image_bytes),
         "png": (encode_png(img), MM.decode_image_bytes),
         "tiff": (
             encode_geotiff(gray, (0.0, 1.0, 0.0, 0.0, 0.0, -1.0)),
             MM.decode_image_bytes,
         ),
         "bmp": (MM.encode_bmp(img), MM.decode_bmp),
-        "gif": (
-            encode_gif(
-                np.stack([img[:, :, 0] % 16, img[:, :, 1] % 16]),
-                np.arange(48, dtype=np.uint8).reshape(16, 3),
-                delays_cs=[5, 5],
-                transparent=3,
-            ),
-            MM.decode_image_bytes,
-        ),
         "avi": (MM.encode_avi(np.stack([img, img])), MM.decode_avi),
-        "avi_mjpg": (
-            MM.encode_avi(np.stack([img, img]), codec="MJPG"),
-            MM.decode_avi,
-        ),
         "wav": (MM.encode_wav(samples, sr), MM.decode_wav),
         "wav_ulaw": (MM.encode_wav(samples, sr, codec="ulaw"), MM.decode_wav),
         "wav_alaw": (MM.encode_wav(samples, sr, codec="alaw"), MM.decode_wav),

@@ -10,7 +10,6 @@ import numpy as np
 import pytest
 
 from coastsat_spark.functions._guard import MAX_DECODE_PIXELS, check_dims
-from coastsat_spark.functions.jpeg import encode_jpeg, decode_jpeg
 from coastsat_spark.functions.png import encode_png, decode_png
 from coastsat_spark.operators import multimodal as MM
 
@@ -58,14 +57,6 @@ def test_png_hostile_dims():
     struct.pack_into(">I", p, 16 + 13, crc)
     with pytest.raises(ValueError, match="PNG.*implausible"):
         decode_png(bytes(p))
-
-
-def test_jpeg_hostile_dims():
-    p = bytearray(encode_jpeg(_img()))
-    sof = bytes(p).index(b"\xff\xc0")
-    struct.pack_into(">HH", p, sof + 5, HUGE, HUGE)  # fh, fw after prec
-    with pytest.raises(ValueError, match="JPEG.*implausible"):
-        decode_jpeg(bytes(p))
 
 
 def test_tiff_hostile_dims():
@@ -171,21 +162,3 @@ def test_packbits_expected_cap_unit():
     assert 64 <= len(out) <= 64 + 128
     # and unbounded when expected is None (back-compat)
     assert len(packbits_decode(b"\x81\xab" * 3)) == 384
-
-
-def test_gif_animation_cumulative_bound(monkeypatch):
-    """Every decoded GIF frame materializes a full logical-screen copy,
-    so the cap must bound screen_px x n_frames, not just one canvas: a
-    tiny file with many frames on a big screen raises cleanly instead
-    of OOM-ing the executor."""
-    from coastsat_spark.functions import _guard, gif
-
-    pal = np.arange(12, dtype=np.uint8).reshape(4, 3)
-    frames = np.zeros((6, 8, 8), dtype=np.uint8)  # 64 px screen, 6 frames
-    payload = gif.encode_gif(frames, pal)
-    got, _ = gif.decode_gif(payload)
-    assert got.shape == (6, 8, 8, 3)
-    # cap allows the screen and 4 frames, not 5+
-    monkeypatch.setattr(_guard, "MAX_DECODE_PIXELS", 64 * 4)
-    with pytest.raises(ValueError, match="GIF animation.*implausible"):
-        gif.decode_gif(payload)

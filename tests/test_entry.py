@@ -2,8 +2,9 @@
 queries()/oracle_sql() registries are consistent."""
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as E
 

@@ -1,44 +1,38 @@
 """Checkpoint/resume + lineage metrics contract."""
 
-import shutil
-
 import pytest
 from pyspark.sql import functions as F
 
 from coastsat_spark.plans import lineage as L
 
-ROOT = "/root/repo/data/test_checkpoints"
+
+@pytest.fixture
+def root(tmp_path):
+    return str(tmp_path / "checkpoints")
 
 
-@pytest.fixture(autouse=True)
-def clean_root():
-    shutil.rmtree(ROOT, ignore_errors=True)
-    yield
-    shutil.rmtree(ROOT, ignore_errors=True)
-
-
-def test_checkpoint_computes_once(spark):
+def test_checkpoint_computes_once(spark, root):
     calls = []
 
     def build():
         calls.append(1)
         return spark.range(100).withColumn("v", F.col("id") * 2)
 
-    a = L.checkpoint(spark, "stage1", "fp1", build, root=ROOT)
-    b = L.checkpoint(spark, "stage1", "fp1", build, root=ROOT)
+    a = L.checkpoint(spark, "stage1", "fp1", build, root=root)
+    b = L.checkpoint(spark, "stage1", "fp1", build, root=root)
     assert a.count() == b.count() == 100
     assert len(calls) == 1  # second call resumed from checkpoint
 
 
-def test_fingerprint_change_recomputes(spark):
+def test_fingerprint_change_recomputes(spark, root):
     calls = []
 
     def build():
         calls.append(1)
         return spark.range(10)
 
-    L.checkpoint(spark, "stage1", "fpA", build, root=ROOT)
-    L.checkpoint(spark, "stage1", "fpB", build, root=ROOT)
+    L.checkpoint(spark, "stage1", "fpA", build, root=root)
+    L.checkpoint(spark, "stage1", "fpB", build, root=root)
     assert len(calls) == 2
 
 
@@ -58,9 +52,9 @@ def test_partition_metrics_cover_all_rows(spark):
     assert (m["wall_ms"] >= 0).all()
 
 
-def test_run_with_lineage(spark):
+def test_run_with_lineage(spark, root):
     out, lin = L.run_with_lineage(
-        spark, "s2", "fp", lambda: spark.range(1000), key_col="id", root=ROOT
+        spark, "s2", "fp", lambda: spark.range(1000), key_col="id", root=root
     )
     assert out.count() == 1000
     assert lin.agg(F.sum("n_rows")).collect()[0][0] == 1000

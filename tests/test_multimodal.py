@@ -19,14 +19,30 @@ def test_audio_roundtrip():
     assert sr == 8000 and len(samples) == 1600
 
 
+def _mjpg_avi() -> bytes:
+    """A DIB AVI whose strf biCompression is retagged 'MJPG'."""
+    b = bytearray(MM.encode_avi(np.zeros((1, 4, 4, 3), dtype=np.uint8)))
+    off = b.index(b"strf") + 8 + 16
+    b[off : off + 4] = b"MJPG"
+    return bytes(b)
+
+
 def test_unimplemented_codecs_fail_loudly():
-    # JPEG/PNG/GIF/BMP/TIFF/WAV are real now; formats beyond them stay
-    # loud stubs (WebP here; a corrupt GIF fails as ValueError instead,
-    # covered in test_gif.py)
-    with pytest.raises(NotImplementedError):
-        MM.decode_image_bytes(b"RIFF\x00\x00\x00\x00WEBPVP8 ")
+    # BMP/PNG/TIFF/WAV/FLAC/DIB-AVI are the real codecs; every other
+    # format is a loud NotImplementedError naming the formats that remain
+    for payload in (
+        b"RIFF\x00\x00\x00\x00WEBPVP8 ",
+        b"\xff\xd8\xff\xe0" + bytes(16),  # JPEG SOI
+        b"GIF89a" + bytes(16),
+    ):
+        with pytest.raises(NotImplementedError, match="expected BMP, PNG, TIFF or FIMG"):
+            MM.decode_image_bytes(payload)
+    with pytest.raises(NotImplementedError, match="expected WAV, FLAC or FAUD"):
+        MM.decode_audio_bytes(b"ID3\x04" + bytes(16))  # MP3 ID3 tag
     with pytest.raises(NotImplementedError):
         MM.decode_audio_bytes(b"RIFFxxxxWAVE")
+    with pytest.raises(NotImplementedError, match="only 24-bit DIB AVI"):
+        MM.decode_avi(_mjpg_avi())
 
 
 def test_media_table_and_features(spark):
@@ -238,75 +254,12 @@ def test_avi_container_structure():
 def test_avi_rejects_compressed_and_foreign():
     with pytest.raises(NotImplementedError, match="RIFF AVI"):
         MM.decode_avi(b"RIFF\x04\x00\x00\x00WAVE")
-    # flip biCompression in strf to a nonzero (non-MJPG) codec id
+    # flip biCompression in strf to a nonzero codec id
     b = bytearray(MM.encode_avi(np.zeros((1, 4, 4, 3), dtype=np.uint8)))
     off = b.index(b"strf") + 8 + 16
     b[off : off + 4] = b"\x01\x00\x00\x00"
-    with pytest.raises(NotImplementedError, match="DIB or MJPG"):
+    with pytest.raises(NotImplementedError, match="24-bit DIB"):
         MM.decode_avi(bytes(b))
-
-
-def test_avi_mjpg_roundtrip_close():
-    """MJPG AVI round-trip: exact geometry/fps, pixel values within a
-    tight JPEG-lossy tolerance on smooth content."""
-    y = np.linspace(0, 150, 16)[:, None, None]
-    x = np.linspace(0, 60, 24)[None, :, None]
-    c = np.array([0.0, 20.0, 40.0])[None, None, :]
-    frames = np.stack(
-        [np.clip(y + x + c + 10 * t, 0, 255) for t in range(5)]
-    ).astype(np.uint8)
-    fps, out = MM.decode_avi(MM.encode_avi(frames, fps=8, codec="MJPG", quality=95))
-    assert fps == 8
-    assert out.shape == frames.shape
-    assert np.mean(np.abs(out.astype(int) - frames.astype(int))) < 4.0
-
-
-def test_avi_mjpg_container_structure():
-    """MJPG writer: '00dc' chunks, MJPG handler+compression tags, and
-    every frame chunk is a standalone decodable JPEG."""
-    import struct
-
-    from coastsat_spark.functions.jpeg import decode_jpeg
-
-    b = MM.encode_avi(np.full((2, 8, 8, 3), 128, dtype=np.uint8), codec="MJPG")
-    assert b[:4] == b"RIFF" and struct.unpack_from("<I", b, 4)[0] == len(b) - 8
-    assert b.count(b"MJPG") == 2 and b"00dc" in b and b"00db" not in b
-    off = b.index(b"strf") + 8 + 16
-    assert b[off : off + 4] == b"MJPG"
-    pos = b.index(b"00dc")
-    sz = struct.unpack_from("<I", b, pos + 4)[0]
-    img = decode_jpeg(bytes(b[pos + 8 : pos + 8 + sz]))
-    assert img.shape[:2] == (8, 8)
-
-
-def test_avi_mjpg_rejects_mismatched_frame_dims():
-    """An MJPG frame whose decoded size disagrees with strf must raise,
-    not silently write out of bounds."""
-    b = bytearray(MM.encode_avi(np.zeros((1, 8, 8, 3), dtype=np.uint8), codec="MJPG"))
-    off = b.index(b"strf") + 8 + 4
-    b[off : off + 4] = (16).to_bytes(4, "little")  # lie: biWidth 8 -> 16
-    with pytest.raises(NotImplementedError, match="strf declares"):
-        MM.decode_avi(bytes(b))
-
-
-def test_video_frame_features_mjpg(spark):
-    """Frame sampling works unchanged over MJPG payloads (decode_avi
-    dispatches on biCompression inside the UDTF)."""
-    import pandas as pd
-
-    frames = np.stack(
-        [np.full((12, 16, 3), 40 * (t + 1), dtype=np.uint8) for t in range(4)]
-    )
-    payload = MM.encode_avi(frames, fps=5, codec="MJPG", quality=95)
-    df = spark.createDataFrame(
-        pd.DataFrame({"media_id": [1], "payload": [payload]}),
-        schema="media_id long, payload binary",
-    )
-    pdf = MM.video_frame_features(df, every=2).toPandas().sort_values("frame_idx")
-    assert list(pdf.frame_idx) == [0, 2]
-    # flat frames survive JPEG essentially exactly
-    assert abs(pdf.brightness.iloc[0] - 40.0) < 1.5
-    assert abs(pdf.brightness.iloc[1] - 120.0) < 1.5
 
 
 def test_video_frame_features(spark):
@@ -408,16 +361,22 @@ def test_on_error_skip_quarantines_corrupt_payloads(spark):
     on_error='skip' drops exactly the undecodable rows; the default
     ('raise') keeps fail-fast semantics; media_decode_errors reports
     the dropped set with exception classes."""
-    good_img = MM.make_jpeg_image(1)
+    good_img = MM.make_bmp_image(1)
     rows = [
         (1, "image", good_img),
-        (2, "image", good_img[: len(good_img) // 2]),   # truncated JPEG
-        (3, "image", b"\x89PNG\r\n\x1a\njunkjunkjunk"), # corrupt PNG
+        (2, "image", good_img[: len(good_img) // 2]),   # truncated BMP
+        (3, "image", b"\x89PNG\r\n\x1a\njunkjunkjunk"), # corrupt PNG   
         (4, "image", MM.make_bmp_image(4)),
         (5, "audio", MM.make_wav_audio(5)),
         (6, "audio", b"RIFF\x10\x00\x00\x00WAVEjunk"),  # WAV, no chunks
         (7, "video", b"RIFF\x08\x00\x00\x00AVI "),      # AVI, no streams
         (8, "image", bytes(64)),                        # unknown magic
+        (9, "image", None),                             # NULL payload
+        (10, "image", b"\xff\xd8\xff\xe0" + bytes(16)),   # JPEG: unsupported
+        (11, "image", b"GIF89a" + bytes(16)),            # GIF: unsupported
+        (12, "audio", b"fLaC" + bytes(16)),              # corrupt FLAC     
+        (13, "video", _mjpg_avi()),                      # MJPG AVI: unsupported
+        (14, "video", MM.make_avi_video(14)),
     ]
     media = spark.createDataFrame(
         rows, "media_id long, kind string, payload binary"
@@ -432,7 +391,7 @@ def test_on_error_skip_quarantines_corrupt_payloads(spark):
     vid = MM.video_frame_features(
         media.filter("kind = 'video'"), on_error="skip"
     ).toPandas()
-    assert len(vid) == 0
+    assert set(vid["media_id"]) == {14}
 
     errs = (
         MM.media_decode_errors(media)
@@ -440,8 +399,10 @@ def test_on_error_skip_quarantines_corrupt_payloads(spark):
         .sort_values("media_id")
         .reset_index(drop=True)
     )
-    assert list(errs["media_id"]) == [2, 3, 6, 7, 8]
+    assert list(errs["media_id"]) == [2, 3, 6, 7, 8, 9, 10, 11, 12, 13]
     assert (errs["error_class"] != "").all()
+    unsupported = errs[errs["media_id"].isin([10, 11, 13])]
+    assert (unsupported["error_class"] == "NotImplementedError").all()
     # the default stays fail-fast
     with pytest.raises(Exception):
         MM.image_features(media).toPandas()
@@ -450,25 +411,21 @@ def test_on_error_skip_quarantines_corrupt_payloads(spark):
 
 
 def test_image_features_grayscale(spark):
-    """1- and 2-channel images (grayscale JPEG, grey+alpha PNG) must not
-    crash image_features: channel 0 is reported as r=g=b=brightness."""
-    from coastsat_spark.functions.jpeg import encode_jpeg
-    from coastsat_spark.functions.png import encode_png
+    """1- and 2-channel images (grey and grey+alpha TIFF) must not crash
+    image_features: channel 0 is reported as r=g=b=brightness."""
+    from coastsat_spark.functions.tiff import encode_tiff
 
     grey = (np.arange(64, dtype=np.uint8).reshape(8, 8) * 3) % 251
     ga = np.dstack([grey, np.full((8, 8), 9, np.uint8)])  # grey+alpha
     media = spark.createDataFrame(
-        [(1, "image", encode_jpeg(grey)), (2, "image", encode_png(ga))],
+        [(1, "image", encode_tiff(grey)), (2, "image", encode_tiff(ga))],
         "media_id long, kind string, payload binary",
     )
     f = MM.image_features(media).toPandas().set_index("media_id").sort_index()
     assert list(f["channels"]) == [1, 2]
     for mid in (1, 2):
         r = f.loc[mid]
-        assert r.mean_r == r.mean_g == r.mean_b == r.brightness
-    # JPEG is lossy but the mean must sit near the true grey mean
-    assert abs(f.loc[1, "brightness"] - grey.mean()) < 3.0
-    assert abs(f.loc[2, "brightness"] - grey.mean()) < 1e-9
+        assert r.mean_r == r.mean_g == r.mean_b == r.brightness == grey.mean()
 
 
 def test_decode_avi_top_down():

@@ -231,10 +231,11 @@ def test_ann_approx_oracle_parity(spark):
     Spark rows exactly at the smoke sf — the same compare the driver
     correctness gate runs at sf0.01."""
     import sys
+    from pathlib import Path
 
     import duckdb
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import __spark_entry__ as E
 
     sfd = "/root/testdata/sf0.001"

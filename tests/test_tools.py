@@ -118,7 +118,7 @@ def test_pipeline_ops_leg_script_formats_and_compiles():
     subprocess, so pin format + compile here."""
     m = _load("tools/pipeline_ops_bench.py", "pipeline_ops_bench")
     src = m._LEG_SCRIPT.format(
-        repo="/root/repo", cpus=8, sf=0.001, trials=1, only=("bpe_encode",),
+        repo=REPO, cpus=8, sf=0.001, trials=1, only=("bpe_encode",),
         quiet_gbps=2.0,
     )
     compile(src, "<leg>", "exec")
